@@ -81,7 +81,10 @@ object SparkEntry {
     else {
       // derive OUTSIDE the map lock — the derivation runs Spark jobs and
       // computeIfAbsent would hold the bin lock for their whole duration;
-      // a racing loser unpersists its duplicate cache and adopts the winner
+      // a racing loser unpersists its duplicate cache and adopts the winner.
+      // The duplicate never shares the winner's cache entry: convOffsets'
+      // localCheckpoint gives every derivation its own plan leaf, so no
+      // plan match links the two (pinned by DerivationSpec's race test).
       // dedges is cached too: it is read directly (edges, hits) AND is the
       // base every derived edge relation (undirected/prEdges/canonical)
       // materializes from on first use

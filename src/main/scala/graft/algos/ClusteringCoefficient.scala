@@ -5,14 +5,15 @@ import org.apache.spark.sql.functions._
 
 /**
  * Local clustering coefficient: coeff(v) = 2·tri(v) / (deg(v)·(deg(v)−1)),
- * 0 for deg < 2. Composes the degree-oriented triangle plan
+ * 0 for deg < 2. Composes the per-vertex triangle count
  * ([[TriangleCount]]) with the undirected degree aggregate — no reference
  * analog (see TriangleCount's header); standard link-graph analytics the
  * north rule's triangle requirement implies.
  *
- * Scale: inherits TriangleCount's O(m^1.5) wedge bound and hub-free
- * orientation; the degree aggregate is one partial-agg'd shuffle; the
- * final join is vid-keyed equi-join over |V| rows per side.
+ * Scale: inherits TriangleCount's hub-split orientation (no out-array
+ * longer than ⌈√(2m)⌉, O(m^1.5) intersection work); the degree aggregate
+ * is one partial-agg'd shuffle; the final join is vid-keyed equi-join
+ * over |V| rows per side.
  */
 object ClusteringCoefficient {
 

@@ -14,8 +14,10 @@ import org.apache.spark.sql.functions._
  *
  * Scale design: enumerating common neighbors of edge (u,w) from either
  * endpoint naively costs Σ_edges deg(endpoint) — hub-quadratic on our
- * tool hubs. Like [[TriangleCount]], each edge is ORIENTED by
- * (degree, vid) rank and candidates are enumerated ONLY from the
+ * tool hubs. Each edge is ORIENTED by (degree, vid) rank (the
+ * per-edge degrees are needed for Jaccard anyway, so unlike
+ * [[TriangleCount]]'s hub split the degree joins cost nothing extra)
+ * and candidates are enumerated ONLY from the
  * lower-rank endpoint's adjacency, bounding the wedge volume by
  * Σ_edges min(deg_u, deg_w) = O(m^1.5) with no hot key; the closure
  * check and the degree lookup are plain equi-joins (sort-merge /

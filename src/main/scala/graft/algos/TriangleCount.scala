@@ -7,53 +7,82 @@ import org.apache.spark.sql.functions._
  * Triangle counting — north-rule addition (absent from the reference,
  * whose algorithm library is PR/SSSP/CC/LPA/MIS/MM/SA:
  * /root/reference/src/examples/hybridgraph/examples/driver/
- * ExampleDriver.java:26-62). Pure DataFrame two-join plan.
+ * ExampleDriver.java:26-62). Pure DataFrame plan over ONE oriented,
+ * packed adjacency relation and ONE equi-join.
  *
- * Scale design: edges are ORIENTED from the lower (degree, vid) endpoint
- * to the higher ("compact-forward" / degree ordering). Every vertex's
- * oriented out-degree is O(sqrt(m)) amortized, so the wedge join output
- * is bounded by O(m^1.5) with no single hot key even when the underlying
- * graph has high-degree hubs (our tool hubs). AQE skew-join splitting
- * handles residual imbalance; the joins are plain equi-joins so Catalyst
- * picks sort-merge/shuffle-hash and pushes the dedup upstream.
+ * Orient (hub split, as the Hybrid Edge Partitioner's degree threshold
+ * τ): a vertex is hot when its degree is ≥ τ = ⌈√(2m)⌉. At most 2m/τ ≤ τ
+ * vertices qualify, so the hot vids are a handful of driver-held literals
+ * (the same pattern as the kernel's hot-source list) and every edge is
+ * oriented by an expression — no degree join. Rank = (hot, vid); each
+ * edge points from its lower-rank endpoint to the higher one.
+ *
+ * Pack: out(v) is one rank-sorted array per vertex. A cold vertex has
+ * fewer than τ neighbours in total; a hot vertex points only at hot
+ * vertices. Either way |out(v)| ≤ τ, so no row ever holds a hub's full
+ * neighbour list.
+ *
+ * Intersect (packed sorted-set intersection in the style of HERO): a
+ * triangle with ranks a < b < c is found exactly once, from the oriented
+ * edge a→b, as c ∈ (suffix of out(a) after b) ∩ out(b). Each oriented
+ * edge v→w is exploded with its suffix; empty suffixes are dropped before
+ * the exchange (a hub is the last element of most lists, so its key stays
+ * out of the exchange); one join on w with out(w) closes the triangles
+ * in-row. The wedge volume is Σ|suffix| = O(m^1.5), never hub-quadratic.
  */
 object TriangleCount {
 
-  /** @param canonical distinct undirected edges with src < dst */
-  def perVertex(canonical: DataFrame): DataFrame = {
-    val deg = canonical.select(col("src").as("v"))
-      .unionByName(canonical.select(col("dst").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("deg"))
+  /** The oriented, packed adjacency: (v, out) with out(v) the rank-sorted
+   * out-neighbours of v, |out(v)| ≤ ⌈√(2m)⌉.
+   * @param canonical distinct undirected edges with src < dst */
+  private[graft] def oriented(canonical: DataFrame): DataFrame = {
+    val m = canonical.count()
+    val tau = math.ceil(math.sqrt(2.0 * m)).toLong
+    val hot: Seq[Long] = canonical.select(explode(array(col("src"), col("dst"))).as("v"))
+      .groupBy("v").count().filter(col("count") >= tau)
+      .collect().map(_.getLong(0)).toSeq
+    def isHot(c: String) = col(c).isin(hot: _*)
 
-    // rank-orient: (u,v) with (deg_u, u) < (deg_v, v)
-    val e = canonical
-      .join(deg.withColumnRenamed("v", "src").withColumnRenamed("deg", "dsrc"), "src")
-      .join(deg.withColumnRenamed("v", "dst").withColumnRenamed("deg", "ddst"), "dst")
-      .select(
-        when(col("dsrc") < col("ddst") || (col("dsrc") === col("ddst") && col("src") < col("dst")), col("src"))
-          .otherwise(col("dst")).as("u"),
-        when(col("dsrc") < col("ddst") || (col("dsrc") === col("ddst") && col("src") < col("dst")), col("dst"))
-          .otherwise(col("src")).as("w"))
-
-    // wedges centered at a: (a->b, a->c) with b<c so each unordered pair
-    // appears once; every triangle has exactly one center (its min-rank
-    // vertex), so no post-dedup is needed. Closure = undirected edge {b,c}
-    // exists, checked against the vid-canonical edge set.
-    val e1 = e.select(col("u").as("a"), col("w").as("b"))
-    val e2 = e.select(col("u").as("a"), col("w").as("c"))
-    val wedges = e1.join(e2, "a").filter(col("b") < col("c"))
-      .select(col("a"), col("b").as("x"), col("c").as("y"))
-    val closing = e.select(least(col("u"), col("w")).as("x"), greatest(col("u"), col("w")).as("y"))
-    val tris = wedges.join(closing, Seq("x", "y"))
-      .select(col("a"), col("x").as("b"), col("y").as("c"))
-
-    tris.select(explode(array(col("a"), col("b"), col("c"))).as("vid"))
-      .groupBy("vid").agg(count(lit(1)).as("triangles"))
+    // src < dst, so (hot, vid) rank flips the edge only when src alone is hot
+    val flip = isHot("src") && !isHot("dst")
+    canonical
+      .select(when(flip, col("dst")).otherwise(col("src")).as("v"),
+        when(flip, col("src")).otherwise(col("dst")).as("w"))
+      .groupBy("v")
+      // collect_list skips nulls: cold then hot, each vid-sorted = rank order
+      .agg(concat(sort_array(collect_list(when(!isHot("w"), col("w")))),
+        sort_array(collect_list(when(isHot("w"), col("w"))))).as("out"))
   }
 
-  /** Global triangle count (one row). */
+  /** One row per oriented edge v→w with a non-empty suffix: (v, w, common)
+   * where common = suffix(out(v), w) ∩ out(w), the third vertex of every
+   * triangle found at v→w. */
+  private def closures(canonical: DataFrame): DataFrame = {
+    val out = oriented(canonical)
+    val wedges = out
+      .select(col("v"), col("out"), posexplode(col("out")).as(Seq("i", "w")))
+      .filter(col("i") < size(col("out")) - 1)
+      .select(col("v"), col("w"),
+        slice(col("out"), col("i") + 2, size(col("out")) - col("i") - 1).as("suffix"))
+    wedges.join(out.select(col("v").as("w"), col("out").as("wout")), "w")
+      .select(col("v"), col("w"), array_intersect(col("suffix"), col("wout")).as("common"))
+  }
+
+  /** Per-vertex triangle counts; vertices in no triangle are absent.
+   * @param canonical distinct undirected edges with src < dst */
+  def perVertex(canonical: DataFrame): DataFrame =
+    closures(canonical)
+      .filter(size(col("common")) > 0)
+      // v and w close every common neighbour; each common neighbour once
+      .select(size(col("common")).cast("long").as("n"),
+        posexplode(concat(array(col("v"), col("w")), col("common"))).as(Seq("i", "vid")))
+      .groupBy("vid")
+      .agg(sum(when(col("i") < 2, col("n")).otherwise(1L)).as("triangles"))
+
+  /** Global triangle count (one row; 0 on an empty or triangle-free graph). */
   def global(canonical: DataFrame): DataFrame =
-    perVertex(canonical).agg((sum(col("triangles")) / 3).cast("long").as("triangles"))
+    closures(canonical)
+      .agg(coalesce(sum(size(col("common")).cast("long")), lit(0L)).as("triangles"))
 
   /** Per-vertex count over all vertices (0 for triangle-free vertices). */
   def perVertexAll(canonical: DataFrame, vertices: DataFrame): DataFrame =

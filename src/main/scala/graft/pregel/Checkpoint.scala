@@ -19,9 +19,10 @@ import scala.jdk.CollectionConverters._
  *   <dir>/<algo>/step=<t>/meta.json   jobAgg + per-partition row counts
  *                                     + full superstep metrics history
  *
- * Reloading the written snapshot also truncates the iterative lineage
- * (replaces the reference's value-<ite> file double-buffering,
- * GraphDataServerDisk.java:1222-1258).
+ * A save only writes: the caller keeps its in-memory, hash(vid, p)-laid
+ * state. A re-read snapshot has the file-split layout of its parquet
+ * files, so only the resume load ([[latest]]) is re-partitioned by the
+ * kernel before it becomes state again.
  */
 /** Where superstep snapshots live — the seam between the checkpoint
  * protocol (what to save when, resume ordering, metrics lineage) and the
@@ -67,8 +68,8 @@ final class Checkpoint(spark: SparkSession, dir: String, algo: String,
 
   private def stepDir(t: Int): String = s"$dir/$algo/step=$t"
 
-  /** Write snapshot + metadata; return the reloaded (lineage-free) state. */
-  def save(state: DataFrame, t: Int, jobAgg: Double, history: Seq[SuperstepMetrics]): DataFrame = {
+  /** Write snapshot + metadata. */
+  def save(state: DataFrame, t: Int, jobAgg: Double, history: Seq[SuperstepMetrics]): Unit = {
     val sd = stepDir(t)
     store.write(state, s"$sd/state")
     val parts = state.groupBy(spark_partition_id().as("pid")).count()
@@ -84,7 +85,6 @@ final class Checkpoint(spark: SparkSession, dir: String, algo: String,
          |"metrics":[${hist.mkString(",")}]}""".stripMargin
     Files.createDirectories(Paths.get(sd))
     Files.writeString(Paths.get(s"$sd/meta.json"), json)
-    store.read(s"$sd/state")
   }
 
   /** Most recent complete snapshot: (superstep, state, jobAgg, metrics

@@ -343,9 +343,11 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
       inAdjCache.foreach(Pregel.unpersistCheckpointed)
     }
 
+    // The regime is set here and restored on every exit path from here on:
+    // the resume load and inbox regeneration run inside the same try as
+    // the loop, so a failed resume cannot leave the session AQE-off at
+    // width p either.
     confKV.foreach { case (k, v) => spark.conf.set(k, v) }
-
-    val resumed = if (cfg.resume) ckpt.flatMap(_.latest()) else None
     // localCheckpoint each superstep: materializes the state AND truncates
     // the iterative logical plan (otherwise analyzer/optimizer cost and
     // driver heap grow superlinearly with superstep count). The stamped
@@ -361,13 +363,7 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
     // alone (a vertex responds only in the superstep that updated it).
     // Full-update supersteps compact: they materialize the merged view
     // and clear the overlays.
-    // The resumed branch stays UNstamped: a checkpoint-loaded relation is
-    // parquet-partitioned, not hash(vid, p) — a false stamp would mis-join.
-    var base = resumed.map(_._2.localCheckpoint(false)).getOrElse(
-      localCheckpointHashed(
-        program.initState(vertsWithDeg).repartition(p, col("vid")),
-        Seq("vid"), p, eager = false))
-    setupMark("init-state")
+    var base: DataFrame = null
     var overlays: Vector[(DataFrame, Long)] = Vector.empty // (delta, rows)
     var deltaRowsAcc = 0L
     val nApprox = (maxVid + 1).toDouble // dense-id |V| proxy (upper-biased when sparse)
@@ -396,228 +392,243 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
     def retireState(): Unit = {
       // blocking: bounds block-manager storage — async unpersist let
       // retired states pile up over long runs
-      base.unpersist(blocking = true)
+      if (base != null) base.unpersist(blocking = true)
       overlays.foreach(_._1.unpersist(blocking = true))
       overlays = Vector.empty
       deltaRowsAcc = 0L
     }
 
-    var startStep = resumed.map(_._1 + 1).getOrElse(1)
-    // metrics lineage up to the snapshot: prefixed to every subsequent
-    // archive (continuous history from superstep 1 across failures);
-    // run() itself returns only THIS run's supersteps.
-    val priorMetrics: Seq[SuperstepMetrics] = resumed.map(_._4).getOrElse(Seq.empty)
-    var inbox: Option[DataFrame] = None
-    if (resumed.isDefined) {
-      // regenerate the inbox the checkpointed step had already sent
-      val style = cost.choose(startStep, base.filter(col("respond")).count(), 0, cfg.stateRowBytes, 1.0)
-      inbox = Some(program.aggregate(exchange(program, base.filter(col("respond")), adj, style, Nil, blkLen)))
-    }
-
-    var jobAgg = resumed.map(_._3).getOrElse(0.0)
     val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetrics]()
-    // deltaFilter programs must not fuse: a delta superstep applies
-    // update() exactly once, so fuse>1 would skip supersteps (today all
-    // deltaFilter programs are MsgDepend and land at 1 anyway — this makes
-    // the invariant structural rather than accidental).
-    // Fusing amortizes the per-barrier fixed cost (driver round-trip +
-    // full-state materialization) and pays a 4x-sized plan per action; the
-    // trade only wins when per-superstep data volume dwarfs the plan
-    // overhead. Below `fuseMinEdges` the barrier is NOT the bottleneck
-    // (r6 probe at 159k edges: fuse=1 5.7s vs fuse=4 9.9s for 10-superstep
-    // PageRank) while above it the r5 scaling evidence favors fuse=4 —
-    // so the floor keeps fusing scale-adaptive rather than constant.
-    val fuse =
-      if (program.usesPriorState || program.updateRule != UpdateAll ||
-        program.deltaFilter.isDefined || edgeCount < cfg.fuseMinEdges) 1
-      else math.max(1, cfg.fusedSupersteps)
-    // Superstep report (VerBlockBeta analog) as OBSERVED metrics: respond
-    // count, est. messages (sum of respond out-degrees), task aggregate,
-    // row count, active count, plus the responding-block set encoded as a
-    // bit_or bitmap (numBlocks bits in ceil(numBlocks/64) longs — bitwise
-    // aggregation is deterministic, which CollectMetrics requires, where
-    // collect_set is not). The metrics ride the materialization action
-    // itself via df.observe(), so one superstep costs exactly ONE job —
-    // round 3 ran a second groupBy(blk)+collect job per barrier, ~half the
-    // fixed cost of the 150-row 25-superstep adjtext fixtures
-    // (VERDICT r3 #5).
-    val blkWords = (cfg.numBlocks + 63) / 64
-    // numeric columns are cast EXPLICITLY (long/double): the Observation
-    // map hands back whatever type the aggregate produced, and a program
-    // whose vertexAggCol/activeCol is Int/Decimal would otherwise be
-    // silently read as 0 by the typed extraction below (ADVICE r4)
-    val reportCols: Seq[Column] =
-      Seq(
-        sum(when(col("respond"), 1L).otherwise(0L)).cast("long").as("_respond"),
-        sum(when(col("respond"), col("outdeg")).otherwise(0L)).cast("long").as("_estMsgs"),
-        sum(program.vertexAggCol).cast("double").as("_vagg"),
-        count(lit(1)).cast("long").as("_rows"),
-        sum(program.activeCol).cast("long").as("_active")) ++
-        // integer div: exact beyond 2^53 vids
-        (0 until blkWords).map(w => expr(
-          s"bit_or(if(respond and (vid div $blkLen) div 64 = $w, " +
-            s"shiftleft(1L, cast((vid div $blkLen) % 64 as int)), 0L))").as(s"_rb$w"))
-    // null = empty input (sum over zero rows); any OTHER unexpected type
-    // is a bug in reportCols' casts and must throw, not read as 0 and
-    // silently corrupt halting/convergence
-    def longOf(m: Map[String, Any], k: String): Long = m.get(k) match {
-      case Some(v: Long) => v
-      case Some(null) | None => 0L
-      case Some(v) => throw new IllegalStateException(
-        s"superstep report $k: expected Long, got ${v.getClass.getName} ($v)")
-    }
-    def respondBlocksOf(m: Map[String, Any]): Seq[Long] =
-      (0 until blkWords).flatMap { w =>
-        val bits = longOf(m, s"_rb$w")
-        (0 until 64).collect { case b if (bits >> b & 1L) == 1L => w * 64L + b }
+    val result = try {
+      val resumed = if (cfg.resume) ckpt.flatMap(_.latest()) else None
+      // A checkpoint-loaded relation has its parquet files' split layout, not
+      // hash(vid, p): re-stamp it through an explicit exchange. States the
+      // loop itself saved never come back from disk (save only writes).
+      base = localCheckpointHashed(
+        resumed.map(_._2).getOrElse(program.initState(vertsWithDeg)).repartition(p, col("vid")),
+        Seq("vid"), p, eager = false)
+      setupMark("init-state")
+
+      var startStep = resumed.map(_._1 + 1).getOrElse(1)
+      // metrics lineage up to the snapshot: prefixed to every subsequent
+      // archive (continuous history from superstep 1 across failures);
+      // run() itself returns only THIS run's supersteps.
+      val priorMetrics: Seq[SuperstepMetrics] = resumed.map(_._4).getOrElse(Seq.empty)
+      var inbox: Option[DataFrame] = None
+      if (resumed.isDefined) {
+        // regenerate the inbox the checkpointed step had already sent
+        val style = cost.choose(startStep, base.filter(col("respond")).count(), 0, cfg.stateRowBytes, 1.0)
+        inbox = Some(program.aggregate(exchange(program, base.filter(col("respond")), adj, style, Nil, blkLen)))
       }
-    var t = startStep
-    var done = false
-    var style: Style = Pull
-    var lastEstMsgs = Long.MaxValue // activity bound for the NEXT update
-    var lastActive = 0L
-    try while (!done && t <= program.maxSupersteps) {
-      if (cfg.failAtSuperstep.contains(t))
-        throw new RuntimeException(s"injected failure at superstep $t (failAtSuperstep test hook)")
-      val t0 = System.nanoTime()
-      // fuse supersteps t..tEnd into one lazy plan (barrier at tEnd)
-      val tEnd = math.min(t + fuse - 1, program.maxSupersteps)
-      val willCkptBoundary = ckpt.isDefined &&
-        tEnd / cfg.checkpointEvery > (t - 1) / cfg.checkpointEvery
-      // Delta superstep (C2 skip): only when the program declares the
-      // contract, the upcoming activity bound is a small fraction of |V|,
-      // and the overlay budget holds (else this step runs full = compacts).
-      // fuse == 1 is structural here (deltaFilter programs force fuse=1
-      // above): a delta step applies update() exactly once, so running it
-      // under fuse>1 would silently skip supersteps — guard it anyway.
-      val deltaStep = cfg.deltaThreshold > 0 && program.deltaFilter.isDefined &&
-        fuse == 1 && inbox.isDefined && t > startStep && !willCkptBoundary &&
-        lastEstMsgs + lastActive <= cfg.deltaThreshold * nApprox &&
-        overlays.length < cfg.maxOverlays &&
-        deltaRowsAcc <= 0.25 * nApprox
-      var newState: DataFrame = null // full mode only
-      var newDelta: DataFrame = null // delta mode only
-      val obs = org.apache.spark.sql.Observation()
-      if (deltaStep) {
-        val ib = inbox.get.withColumnRenamed("vid", "_mvid")
-        // hash join, not sort-merge: both sides are already hash(vid, p)
-        // co-partitioned, so SMJ's only addition is two per-superstep sorts
-        val ibr = if (lastEstMsgs <= 100000L) broadcast(ib) else ib.hint("shuffle_hash")
-        val joinedAll = view().join(ibr, col("vid") === col("_mvid"), "left_outer").drop("_mvid")
-        val touched = joinedAll.filter(program.deltaFilter.get)
-        newDelta = localCheckpointHashed(
-          program.update(touched, t, jobAgg)
-            .observe(obs, reportCols.head, reportCols.tail: _*), Seq("vid"), p)
-      } else {
-        var st = view()
-        var in = inbox
-        for (tt <- t to tEnd) {
-          val joinLeft = staticBase.getOrElse(st)
-          val joined = in match {
-            // shuffle_hash: both sides hash(vid, p) co-partitioned — SMJ
-            // would only add two per-superstep sorts (r6 plan audit)
-            case Some(ib) => joinLeft.join(
-              ib.withColumnRenamed("vid", "_mvid").hint("shuffle_hash"),
-              col("vid") === col("_mvid"), "left_outer").drop("_mvid")
-            case None => program.emptyInboxCols.foldLeft(joinLeft)((df, c) => df.withColumn(c._1, c._2))
-          }
-          st = program.update(joined, tt, jobAgg)
-          if (tt == 2 && sys.env.contains("GRAFT_EXPLAIN")) st.explain("formatted")
-          if (tt < tEnd) in = Some(program.aggregate(exchange(program, st.filter(col("respond")), adj, style, Nil, blkLen)))
-        }
-        // ONE action per barrier: the eager localCheckpoint materializes
-        // the state (and truncates lineage — the reference's
-        // double-buffered value files, GraphDataServerDisk.java:1222-1258)
-        // and the observed metrics ride the same job.
-        // one-arg overload ONLY: localCheckpoint(eager, storageLevel)
-        // builds a LogicalRDD with UnknownPartitioning (verified via
-        // explain), which silently re-exchanges the state in every
-        // downstream join; the one-arg form preserves hash(vid) and keeps
-        // the superstep's joins co-partitioned.
-        newState = localCheckpointHashed(
-          st.observe(obs, reportCols.head, reportCols.tail: _*), Seq("vid"), p)
-        if (sys.env.contains("GRAFT_EXPLAIN"))
-          println(s"[part] step=$t st-top=" + st.queryExecution.executedPlan.outputPartitioning)
-        if (sys.env.contains("GRAFT_PHASES"))
-          println(s"[phases] step=$t-$tEnd " + newState.queryExecution.tracker.phases
-            .map { case (k, v) => s"$k=${v.durationMs}ms" }.mkString(" "))
-      }
-      // obs.get blocks until the listener delivers this execution's
-      // metrics — the action above has already run, so this is a
-      // listener-bus round-trip, not a job.
-      val rep: Map[String, Any] = obs.get
-      val respondCount = longOf(rep, "_respond")
-      val estMsgs = longOf(rep, "_estMsgs")
-      val newJobAgg = rep.get("_vagg") match {
-        case Some(v: Double) => v
-        case Some(null) | None => 0.0
+
+      var jobAgg = resumed.map(_._3).getOrElse(0.0)
+      // deltaFilter programs must not fuse: a delta superstep applies
+      // update() exactly once, so fuse>1 would skip supersteps (today all
+      // deltaFilter programs are MsgDepend and land at 1 anyway — this makes
+      // the invariant structural rather than accidental).
+      // Fusing amortizes the per-barrier fixed cost (driver round-trip +
+      // full-state materialization) and pays a 4x-sized plan per action; the
+      // trade only wins when per-superstep data volume dwarfs the plan
+      // overhead. Below `fuseMinEdges` the barrier is NOT the bottleneck
+      // (r6 probe at 159k edges: fuse=1 5.7s vs fuse=4 9.9s for 10-superstep
+      // PageRank) while above it the r5 scaling evidence favors fuse=4 —
+      // so the floor keeps fusing scale-adaptive rather than constant.
+      val fuse =
+        if (program.usesPriorState || program.updateRule != UpdateAll ||
+          program.deltaFilter.isDefined || edgeCount < cfg.fuseMinEdges) 1
+        else math.max(1, cfg.fusedSupersteps)
+      // Superstep report (VerBlockBeta analog) as OBSERVED metrics: respond
+      // count, est. messages (sum of respond out-degrees), task aggregate,
+      // row count, active count, plus the responding-block set encoded as a
+      // bit_or bitmap (numBlocks bits in ceil(numBlocks/64) longs — bitwise
+      // aggregation is deterministic, which CollectMetrics requires, where
+      // collect_set is not). The metrics ride the materialization action
+      // itself via df.observe(), so one superstep costs exactly ONE job —
+      // round 3 ran a second groupBy(blk)+collect job per barrier, ~half the
+      // fixed cost of the 150-row 25-superstep adjtext fixtures
+      // (VERDICT r3 #5).
+      val blkWords = (cfg.numBlocks + 63) / 64
+      // numeric columns are cast EXPLICITLY (long/double): the Observation
+      // map hands back whatever type the aggregate produced, and a program
+      // whose vertexAggCol/activeCol is Int/Decimal would otherwise be
+      // silently read as 0 by the typed extraction below (ADVICE r4)
+      val reportCols: Seq[Column] =
+        Seq(
+          sum(when(col("respond"), 1L).otherwise(0L)).cast("long").as("_respond"),
+          sum(when(col("respond"), col("outdeg")).otherwise(0L)).cast("long").as("_estMsgs"),
+          sum(program.vertexAggCol).cast("double").as("_vagg"),
+          count(lit(1)).cast("long").as("_rows"),
+          sum(program.activeCol).cast("long").as("_active")) ++
+          // integer div: exact beyond 2^53 vids
+          (0 until blkWords).map(w => expr(
+            s"bit_or(if(respond and (vid div $blkLen) div 64 = $w, " +
+              s"shiftleft(1L, cast((vid div $blkLen) % 64 as int)), 0L))").as(s"_rb$w"))
+      // null = empty input (sum over zero rows); any OTHER unexpected type
+      // is a bug in reportCols' casts and must throw, not read as 0 and
+      // silently corrupt halting/convergence
+      def longOf(m: Map[String, Any], k: String): Long = m.get(k) match {
+        case Some(v: Long) => v
+        case Some(null) | None => 0L
         case Some(v) => throw new IllegalStateException(
-          s"superstep report _vagg: expected Double, got ${v.getClass.getName} ($v)")
+          s"superstep report $k: expected Long, got ${v.getClass.getName} ($v)")
       }
-      val touchedRows = longOf(rep, "_rows")
-      val activeCount = longOf(rep, "_active")
-      val respondBlocks = respondBlocksOf(rep)
-
-      val halt = respondCount == 0L || program.halted(newJobAgg, tEnd) || tEnd == program.maxSupersteps
-      // L5 fragment volume for the shuffle-gather pull estimate: exact edge
-      // count over responding source blocks, from the driver-held stats.
-      val fragEdges = respondBlocks.iterator
-        .map(b => blkStats.get(b).map(_.edges).getOrElse(0L)).sum
-      style = cost.choose(tEnd, respondCount, estMsgs, cfg.stateRowBytes,
-        combineRatio = math.min(1.0, (maxVid + 1).toDouble / math.max(1L, estMsgs)),
-        respondBlockEdges = fragEdges)
-
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      ckptPolicy.recordStep(wallMs)
-      val doCkpt = ckpt.isDefined &&
-        ((willCkptBoundary && (!cfg.dynamicCheckpoint || ckptPolicy.required)) || halt)
-      val m = SuperstepMetrics(tEnd, style.tag, respondCount, estMsgs, newJobAgg,
-        cost.lastQ, respondBlocks.length, cfg.numBlocks, wallMs / (tEnd - t + 1), doCkpt, deltaStep)
-      for (tt <- t to tEnd) metrics += m.copy(superstep = tt)
-
-      var senders: DataFrame = null
-      if (deltaStep) {
-        overlays :+= ((newDelta, touchedRows))
-        deltaRowsAcc += touchedRows
-        senders = newDelta.filter(col("respond"))
-        if (doCkpt) { // halt-time snapshot: persist the merged view
-          val c0 = System.nanoTime()
-          val saved = ckpt.get.save(view(), tEnd, newJobAgg, priorMetrics ++ metrics)
-          ckptPolicy.recordCheckpoint((System.nanoTime() - c0) / 1000000)
-          retireState()
-          base = saved
+      def respondBlocksOf(m: Map[String, Any]): Seq[Long] =
+        (0 until blkWords).flatMap { w =>
+          val bits = longOf(m, s"_rb$w")
+          (0 until 64).collect { case b if (bits >> b & 1L) == 1L => w * 64L + b }
         }
-      } else {
-        var cur = newState
-        if (doCkpt) {
-          val c0 = System.nanoTime()
-          cur = ckpt.get.save(newState, tEnd, newJobAgg, priorMetrics ++ metrics)
-          ckptPolicy.recordCheckpoint((System.nanoTime() - c0) / 1000000)
+      var t = startStep
+      var done = false
+      var style: Style = Pull
+      var lastEstMsgs = Long.MaxValue // activity bound for the NEXT update
+      var lastActive = 0L
+      while (!done && t <= program.maxSupersteps) {
+        if (cfg.failAtSuperstep.contains(t))
+          throw new RuntimeException(s"injected failure at superstep $t (failAtSuperstep test hook)")
+        val t0 = System.nanoTime()
+        // fuse supersteps t..tEnd into one lazy plan (barrier at tEnd)
+        val tEnd = math.min(t + fuse - 1, program.maxSupersteps)
+        val willCkptBoundary = ckpt.isDefined &&
+          tEnd / cfg.checkpointEvery > (t - 1) / cfg.checkpointEvery
+        // Delta superstep (C2 skip): only when the program declares the
+        // contract, the upcoming activity bound is a small fraction of |V|,
+        // and the overlay budget holds (else this step runs full = compacts).
+        // fuse == 1 is structural here (deltaFilter programs force fuse=1
+        // above): a delta step applies update() exactly once, so running it
+        // under fuse>1 would silently skip supersteps — guard it anyway.
+        val deltaStep = cfg.deltaThreshold > 0 && program.deltaFilter.isDefined &&
+          fuse == 1 && inbox.isDefined && t > startStep && !willCkptBoundary &&
+          lastEstMsgs + lastActive <= cfg.deltaThreshold * nApprox &&
+          overlays.length < cfg.maxOverlays &&
+          deltaRowsAcc <= 0.25 * nApprox
+        var newState: DataFrame = null // full mode only
+        var newDelta: DataFrame = null // delta mode only
+        val obs = org.apache.spark.sql.Observation()
+        if (deltaStep) {
+          val ib = inbox.get.withColumnRenamed("vid", "_mvid")
+          // hash join, not sort-merge: both sides are already hash(vid, p)
+          // co-partitioned, so SMJ's only addition is two per-superstep sorts
+          val ibr = if (lastEstMsgs <= 100000L) broadcast(ib) else ib.hint("shuffle_hash")
+          val joinedAll = view().join(ibr, col("vid") === col("_mvid"), "left_outer").drop("_mvid")
+          val touched = joinedAll.filter(program.deltaFilter.get)
+          newDelta = localCheckpointHashed(
+            program.update(touched, t, jobAgg)
+              .observe(obs, reportCols.head, reportCols.tail: _*), Seq("vid"), p)
+        } else {
+          var st = view()
+          var in = inbox
+          for (tt <- t to tEnd) {
+            val joinLeft = staticBase.getOrElse(st)
+            val joined = in match {
+              // shuffle_hash: both sides hash(vid, p) co-partitioned — SMJ
+              // would only add two per-superstep sorts (r6 plan audit)
+              case Some(ib) => joinLeft.join(
+                ib.withColumnRenamed("vid", "_mvid").hint("shuffle_hash"),
+                col("vid") === col("_mvid"), "left_outer").drop("_mvid")
+              case None => program.emptyInboxCols.foldLeft(joinLeft)((df, c) => df.withColumn(c._1, c._2))
+            }
+            st = program.update(joined, tt, jobAgg)
+            if (tt == 2 && sys.env.contains("GRAFT_EXPLAIN")) st.explain("formatted")
+            if (tt < tEnd) in = Some(program.aggregate(exchange(program, st.filter(col("respond")), adj, style, Nil, blkLen)))
+          }
+          // ONE action per barrier: the eager localCheckpoint materializes
+          // the state (and truncates lineage — the reference's
+          // double-buffered value files, GraphDataServerDisk.java:1222-1258)
+          // and the observed metrics ride the same job.
+          // one-arg overload ONLY: localCheckpoint(eager, storageLevel)
+          // builds a LogicalRDD with UnknownPartitioning (verified via
+          // explain), which silently re-exchanges the state in every
+          // downstream join; the one-arg form preserves hash(vid) and keeps
+          // the superstep's joins co-partitioned.
+          newState = localCheckpointHashed(
+            st.observe(obs, reportCols.head, reportCols.tail: _*), Seq("vid"), p)
+          if (sys.env.contains("GRAFT_EXPLAIN"))
+            println(s"[part] step=$t st-top=" + st.queryExecution.executedPlan.outputPartitioning)
+          if (sys.env.contains("GRAFT_PHASES"))
+            println(s"[phases] step=$t-$tEnd " + newState.queryExecution.tracker.phases
+              .map { case (k, v) => s"$k=${v.durationMs}ms" }.mkString(" "))
         }
-        senders = cur.filter(col("respond"))
-        retireState() // full step compacts: old base + overlays retire
-        base = cur
+        // obs.get blocks until the listener delivers this execution's
+        // metrics — the action above has already run, so this is a
+        // listener-bus round-trip, not a job.
+        val rep: Map[String, Any] = obs.get
+        val respondCount = longOf(rep, "_respond")
+        val estMsgs = longOf(rep, "_estMsgs")
+        val newJobAgg = rep.get("_vagg") match {
+          case Some(v: Double) => v
+          case Some(null) | None => 0.0
+          case Some(v) => throw new IllegalStateException(
+            s"superstep report _vagg: expected Double, got ${v.getClass.getName} ($v)")
+        }
+        val touchedRows = longOf(rep, "_rows")
+        val activeCount = longOf(rep, "_active")
+        val respondBlocks = respondBlocksOf(rep)
+
+        val halt = respondCount == 0L || program.halted(newJobAgg, tEnd) || tEnd == program.maxSupersteps
+        // L5 fragment volume for the shuffle-gather pull estimate: exact edge
+        // count over responding source blocks, from the driver-held stats.
+        val fragEdges = respondBlocks.iterator
+          .map(b => blkStats.get(b).map(_.edges).getOrElse(0L)).sum
+        style = cost.choose(tEnd, respondCount, estMsgs, cfg.stateRowBytes,
+          combineRatio = math.min(1.0, (maxVid + 1).toDouble / math.max(1L, estMsgs)),
+          respondBlockEdges = fragEdges)
+
+        val wallMs = (System.nanoTime() - t0) / 1000000
+        ckptPolicy.recordStep(wallMs)
+        val doCkpt = ckpt.isDefined &&
+          ((willCkptBoundary && (!cfg.dynamicCheckpoint || ckptPolicy.required)) || halt)
+        val m = SuperstepMetrics(tEnd, style.tag, respondCount, estMsgs, newJobAgg,
+          cost.lastQ, respondBlocks.length, cfg.numBlocks, wallMs / (tEnd - t + 1), doCkpt, deltaStep)
+        for (tt <- t to tEnd) metrics += m.copy(superstep = tt)
+
+        var senders: DataFrame = null
+        if (deltaStep) {
+          overlays :+= ((newDelta, touchedRows))
+          deltaRowsAcc += touchedRows
+          senders = newDelta.filter(col("respond"))
+          if (doCkpt) { // halt-time snapshot: persist the merged view
+            val c0 = System.nanoTime()
+            // materialized and stamped first: the overlay joins keep base's
+            // hash(vid, p) layout, and the saved state stays the new base
+            val merged = localCheckpointHashed(view(), Seq("vid"), p)
+            ckpt.get.save(merged, tEnd, newJobAgg, priorMetrics ++ metrics)
+            ckptPolicy.recordCheckpoint((System.nanoTime() - c0) / 1000000)
+            retireState()
+            base = merged
+          }
+        } else {
+          if (doCkpt) {
+            val c0 = System.nanoTime()
+            ckpt.get.save(newState, tEnd, newJobAgg, priorMetrics ++ metrics)
+            ckptPolicy.recordCheckpoint((System.nanoTime() - c0) / 1000000)
+          }
+          senders = newState.filter(col("respond"))
+          retireState() // full step compacts: old base + overlays retire
+          base = newState
+        }
+
+        if (!halt) {
+          val msgs = exchange(program, senders, adj, style, respondBlocks.toSeq, blkLen)
+          inbox = Some(program.aggregate(msgs))
+        } else done = true
+
+        jobAgg = newJobAgg
+        lastEstMsgs = estMsgs
+        lastActive = activeCount
+        t = tEnd + 1
       }
-
-      if (!halt) {
-        val msgs = exchange(program, senders, adj, style, respondBlocks.toSeq, blkLen)
-        inbox = Some(program.aggregate(msgs))
-      } else done = true
-
-      jobAgg = newJobAgg
-      lastEstMsgs = estMsgs
-      lastActive = activeCount
-      t = tEnd + 1
+      view()
     } catch {
       case e: Throwable =>
-        // a crashed run (incl. the injected-failure hook) must not leak
-        // cached relations into the surviving session
+        // a crashed run (incl. the injected-failure hook and a failed
+        // resume load) must not leak cached relations or the loop regime
+        // into the surviving session
         releaseSetupRelations()
         retireState()
         throw e
     }
     releaseSetupRelations()
-    (view(), metrics.toSeq)
+    (result, metrics.toSeq)
   }
 
   /** Build the raw message relation msgs(vid, msg) for one exchange.

@@ -88,4 +88,29 @@ class DerivationSpec extends SparkTestBase {
     val (_, ms) = p.run(new graft.algos.SSSP(0L, SparkEntry.SSSP_ITERS), g.verts.select("vid"), weighted)
     assert(ms.last.respondCount == 0, s"SSSP must converge within ${SparkEntry.SSSP_ITERS} supersteps at sf0.001")
   }
+
+  test("graphOf: two concurrent first calls leave verts and dedges cached") {
+    // a fresh events table, so both calls miss the session's graph map and
+    // race to derive; the loser adopts the winner's bundle and releases
+    // only its own duplicate cache entries
+    val dir = Files.createTempDirectory("graft-race").toString
+    spark.range(400).select(col("id").as("event_id"),
+        timestamp_micros(lit(1700000000000000L) + col("id") * 1000L).as("ts"),
+        (col("id") % 20).as("user_id"),
+        element_at(array(lit("click"), lit("view"), lit("error"), lit("purchase")),
+          (col("id") % 4 + 1).cast("int")).as("event_type"),
+        lit(1.0).as("value"), lit("{}").as("props"))
+      .write.parquet(s"$dir/events.parquet")
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val calls = (1 to 2).map(_ => java.util.concurrent.CompletableFuture.supplyAsync { () =>
+      start.await(); SparkEntry.graphOf(spark, dir)
+    })
+    start.countDown()
+    val gs = calls.map(_.get())
+    assert(gs.distinct.size == 1, "both calls must return the winner's bundle")
+    val storage = org.apache.spark.storage.StorageLevel.NONE
+    assert(gs.head.verts.storageLevel != storage, "verts lost its cache")
+    assert(gs.head.dedges.storageLevel != storage, "dedges lost its cache")
+    assert(gs.head.verts.count() == gs.head.n)
+  }
 }

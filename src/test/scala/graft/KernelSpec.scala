@@ -80,6 +80,48 @@ class KernelSpec extends SparkTestBase {
       s"metrics lineage must be continuous from superstep 1, got $lineage")
   }
 
+  test("CC snapshots at >= 8 partitions: saved and resumed state keep the hash(vid, p) layout") {
+    // a snapshot re-read has its parquet files' split layout, not
+    // hash(vid, 9); a delta superstep after a save or a resume must not
+    // build on it as if it were stamped ("Can't zip RDDs with unequal
+    // numbers of partitions"). Path graph: CC's tail supersteps run in
+    // delta mode; push style, so a delta step's senders meet the packed
+    // adjacency in a co-partitioned join instead of a broadcast.
+    val dir = Files.createTempDirectory("graft-ckpt-wide").toString
+    val sym = (0L until 39L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
+    val verts = vertDF(40)
+    def labels(cfg: PregelConfig): Map[Long, Long] =
+      new Pregel(spark, cfg).run(new ConnectedComponents(50), verts, edgeDF(sym))._1
+        .select("vid", "label").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val wide = PregelConfig(numPartitions = 9, targetEdgesPerPartition = 0, mode = ForcePush)
+    val full = labels(wide)
+    assert(full.values.toSet == Set(0L))
+
+    val cfg = wide.copy(checkpointDir = Some(dir), checkpointEvery = 3, dynamicCheckpoint = false)
+    assert(labels(cfg.copy(checkpointDir = Some(dir + "-clean"))) == full,
+      "an uninterrupted checkpointed run must equal the plain run")
+    val ex = intercept[RuntimeException](labels(cfg.copy(failAtSuperstep = Some(12))))
+    assert(ex.getMessage.contains("superstep 12"))
+    assert(labels(cfg.copy(resume = true)) == full, "resumed run must equal the uninterrupted run")
+  }
+
+  test("a failed resume load restores the session's AQE and shuffle-width conf") {
+    // a complete-looking snapshot (_SUCCESS + meta.json) whose state is not parquet
+    val dir = Files.createTempDirectory("graft-corrupt").toString
+    val step = java.nio.file.Paths.get(dir, "cc", "step=3")
+    Files.createDirectories(step.resolve("state"))
+    Files.writeString(step.resolve("state").resolve("part-00000.parquet"), "not parquet")
+    Files.writeString(step.resolve("state").resolve("_SUCCESS"), "")
+    Files.writeString(step.resolve("meta.json"), """{"algo":"cc","superstep":3,"jobAgg":0.0}""")
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val before = keys.map(spark.conf.getOption)
+    val cfg = PregelConfig(numPartitions = 9, targetEdgesPerPartition = 0,
+      checkpointDir = Some(dir), resume = true)
+    val sym = (0L until 9L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
+    intercept[Exception](new Pregel(spark, cfg).run(new ConnectedComponents(10), vertDF(10), edgeDF(sym)))
+    assert(keys.map(spark.conf.getOption) == before)
+  }
+
   test("checkpoint metadata carries per-partition lineage and metrics") {
     val dir = Files.createTempDirectory("graft-ckpt2").toString
     val verts = vertDF(10)
