@@ -19,13 +19,6 @@ case object ForcePush extends ExchangeMode
 case object ForcePull extends ExchangeMode
 case object ForcePullShuffle extends ExchangeMode
 case object Hybrid extends ExchangeMode
-/** Mini-superstep estimation (reference C17): the style is re-decided
- * EVERY superstep, pre-exchange, purely from the estimated counters of
- * the imminent exchange (JobInProgress.getNextMiniSuperStepCommand
- * :511-584) — no dead-band, no switch lock. PUSH must clear a
- * pull-biased margin (:575-581, `miniQ < -230` in the reference's
- * disk-seconds units; here MB of exchange traffic). */
-case object MiniHybrid extends ExchangeMode
 
 /**
  * Per-superstep exchange chooser, mirroring the reference's master-side
@@ -42,7 +35,7 @@ case object MiniHybrid extends ExchangeMode
  * + fetch — while pull re-reads edge fragments of responding blocks and
  * moves the respond values once):
  *   PUSH         ~ 2 * combinedMsgBytes
- *   PULL (bcast) ~ respondBytes * numExecutors, respondBytes <= cap
+ *   PULL (bcast) ~ respondBytes * numExecutors (4), respondBytes <= cap
  *   PULL (shuffle gather) ~ respondBytes + respondBlockEdges * edgeBytes
  * The shuffle-gather variant needs the per-block edge stats (L5); when the
  * caller can't supply them (respondBlockEdges == Long.MaxValue) an
@@ -51,13 +44,13 @@ case object MiniHybrid extends ExchangeMode
  * the model tracks the pull FAMILY and materializes the variant by cap,
  * so cap crossings don't trip the switch lock.
  */
-final class CostModel(
-    mode: ExchangeMode,
-    numExecutors: Int,
-    broadcastCapBytes: Long,
-    deadBandMb: Double = 2.0,
-    switchLock: Int = 2,
-    miniPushMarginMb: Double = 2.0) {
+final class CostModel(mode: ExchangeMode, broadcastCapBytes: Long) {
+  // dead-band and switch lock are hard-coded in the reference too
+  // (JobInProgress.java:932-998); the executor count is a fixed cluster-size
+  // guess until the model is calibrated against measured exchange costs
+  private val numExecutors = 4
+  private val deadBandMb = 2.0
+  private val switchLock = 2
 
   private var current: Style = Pull
   private var first = true
@@ -94,16 +87,6 @@ final class CostModel(
       case ForcePush => current = Push
       case ForcePull => current = Pull
       case ForcePullShuffle => current = PullShuffle
-      case MiniHybrid =>
-        if (capped && !fragKnown) current = Push // cannot broadcast, no stats to gather
-        else {
-          // C17: per-superstep miniQ decision from estimated counters alone
-          val q = qEstimate(respondBytes, estMsgs, combineRatio, capped, respondBlockEdges)
-          lastQ = q
-          current =
-            if (q < -miniPushMarginMb) Push // pull-biased margin
-            else pullVariant
-        }
       case Hybrid =>
         val q = qEstimate(respondBytes, estMsgs, combineRatio, capped, respondBlockEdges)
         lastQ = q

@@ -25,11 +25,8 @@ case class SuperstepMetrics(
 
 case class PregelConfig(
     numPartitions: Int = 32,
-    numBlocks: Int = 256, // VBlock analog (Constants.java:84 default 5/task)
     mode: ExchangeMode = Hybrid,
-    numExecutors: Int = 4, // cost-model cluster-size knob
     broadcastCapBytes: Long = 16L << 20, // broadcast build is driver-bound; pull only pays off for small respond sets
-    stateRowBytes: Int = 32,
     checkpointDir: Option[String] = None,
     checkpointEvery: Int = 10,
     /** Cost-based checkpoint gating on top of the interval (reference
@@ -45,7 +42,6 @@ case class PregelConfig(
      * recovery spec kills a run between dynamic-policy checkpoints with
      * delta overlays in flight and resumes it. */
     failAtSuperstep: Option[Int] = None,
-    blockPruneThreshold: Double = 0.5,
     /** Fuse k supersteps into one Spark action (barrier every k) for
      * UpdateAll programs that don't read prior state (PageRank): k
      * supersteps become one pipelined plan, dividing per-superstep driver
@@ -60,8 +56,6 @@ case class PregelConfig(
      * size at the cost of re-shuffling the respond relation, so the path
      * activates only when hot sources exist. saltMinDeg <= 0 disables. */
     saltMinDeg: Long = 1L << 16,
-    /** Max number of salted hub sources (driver-held list). */
-    maxHotSources: Int = 10000,
     /** Delta/active-set updates (reference C2 VBlock skip): when a
      * program declares a deltaFilter and the upcoming superstep's
      * activity bound (est. messages + active set) is below this fraction
@@ -125,236 +119,31 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
    *  @param edges    (src: long, dst: long [, weight: double]) directed
    *  @return (final state, per-superstep metrics) */
   def run(program: VertexProgram, vertices: DataFrame, edges: DataFrame): (DataFrame, Seq[SuperstepMetrics]) = {
-    // Stage the input edges once: both the degree aggregation and the CSR
-    // packing read them, and the caller usually hands us a lazy derivation
-    // (symmetrize/self-loops over the transcript graph) that would
-    // otherwise execute twice. Unpersisted right after the packed relation
-    // materializes below.
-    val setupT0 = System.nanoTime()
-    def setupMark(tag: String): Unit = if (sys.env.contains("GRAFT_PHASES"))
-      println(f"[setup] $tag at ${(System.nanoTime() - setupT0) / 1e9}%.2fs")
-    // If the caller already cached the edge relation (e.g. a shared
-    // derivation bundle reused across queries), don't re-persist it here —
-    // and, more importantly, don't unpersist it at the end: evicting a
-    // caller's cache would silently re-derive the relation for the next
-    // query that shares it.
-    val callerCached = edges.storageLevel != StorageLevel.NONE
-    val ec = if (callerCached) edges else edges.persist(StorageLevel.MEMORY_AND_DISK)
-    // per-source out-degree + dst bounds in ONE aggregation: the degree
-    // relation, the global degree stats, AND the L5 per-block stats all
-    // derive from this single |E| pass (block aggregates roll up from the
-    // per-source rows — no second scan of the edge relation)
-    val deg = ec.groupBy(col("src").as("vid")).agg(
-        count(lit(1)).as("outdeg"),
-        min(col("dst")).as("_dmin"), max(col("dst")).as("_dmax"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Empty-vertex guard: fail soft (empty result, no supersteps) instead of
-    // an NPE out of head() below — a user's first empty partition should not
-    // be a 500-line stack trace.
-    val maxVidRow = vertices.agg(max(col("vid"))).head()
-    if (maxVidRow.isNullAt(0)) {
-      val emptyState = program.initState(
-        vertices.join(deg.select("vid", "outdeg"), Seq("vid"), "left_outer")
-          .withColumn("outdeg", coalesce(col("outdeg"), lit(0L))))
-      if (!callerCached) ec.unpersist(blocking = false)
-      deg.unpersist(blocking = false)
-      return (emptyState, Seq.empty)
+    import Pregel.{NumBlocks, StateRowBytes}
+    // Every relation this run pins in the block manager is registered here
+    // the moment it is created; the one finally below releases them all on
+    // every exit path (normal, empty input, crash in setup or in the loop).
+    // Eagerly localCheckpointed relations are freed through their RDD: their
+    // storage never enters the CacheManager, so Dataset.unpersist can't
+    // reach it and ContextCleaner GC leaked it into the surviving session
+    // (ADVICE r4).
+    val held = scala.collection.mutable.ArrayBuffer[() => Unit]()
+    def hold(df: DataFrame, release: DataFrame => Unit = Pregel.unpersistCheckpointed): DataFrame = {
+      held += (() => release(df))
+      df
     }
-    setupMark("vertices-maxvid")
-    val maxVid = maxVidRow.getLong(0)
-    val blkLen = math.max(1L, (maxVid + cfg.numBlocks) / cfg.numBlocks)
-    // L5 edge-bound stats (reference EdgeHashBucMgr.java:25-51): per-source-
-    // block edge count + dst id bounds, rolled up from the per-source degree
-    // relation and held on the driver (<= numBlocks rows). Feeds the cost
-    // model's pull-fragment volume (sum of edge counts over responding
-    // blocks) — the reference's dependency-matrix sizing. The same collect
-    // yields the global edge count and max out-degree (the hub cut), so
-    // setup pays ONE stats job, not three.
-    val blkRows = deg.groupBy(expr(s"vid div $blkLen").as("blk"))
-      .agg(sum(col("outdeg")).as("cnt"), max(col("outdeg")).as("maxdeg"),
-        min(col("_dmin")).as("dmin"), max(col("_dmax")).as("dmax"))
-      .collect()
-    val blkStats: Map[Long, BlockEdgeStats] = blkRows
-      .map(r => r.getLong(0) -> BlockEdgeStats(r.getLong(1), r.getLong(3), r.getLong(4)))
-      .toMap
-    setupMark("deg-blk-stats")
-    val edgeCount = blkRows.iterator.map(_.getLong(1)).sum
-    val maxOutdeg = if (blkRows.isEmpty) 0L else blkRows.iterator.map(_.getLong(2)).max
-    // Scale-adaptive effective partition count (guide §2): derived from
-    // the measured edge count, capped at the configured parallelism. Every
-    // relation the superstep loop touches (packed adjacency, fragments,
-    // state, overlays) is partitioned at this width.
-    val p =
-      if (cfg.targetEdgesPerPartition <= 0) cfg.numPartitions
-      else math.min(cfg.numPartitions.toLong,
-        math.max(1L, (edgeCount + cfg.targetEdgesPerPartition - 1) / cfg.targetEdgesPerPartition)).toInt
-    val hubCut = math.max(cfg.saltMinDeg, 2L * edgeCount / math.max(1, p))
-    // At most p/2 sources can have out-degree >= 2*edges/p (they'd exceed
-    // the edge total otherwise), so the hot list is always a handful of
-    // driver-held literals. Literals — NOT a joined DataFrame: a hot-list
-    // relation appearing on BOTH sides of the exchange join trips Spark's
-    // self-join deduplication, which rewrites one side's attribute ids and
-    // silently breaks the persisted edge cache's plan matching (measured:
-    // the whole edge derivation re-ran every superstep).
-    val hotVids: Array[Long] =
-      if (cfg.saltMinDeg > 0 && maxOutdeg >= hubCut)
-        deg.filter(col("outdeg") >= hubCut)
-          .orderBy(col("outdeg").desc).limit(cfg.maxHotSources)
-          .collect().map(_.getLong(0))
-      else Array.empty[Long]
-    // Packed per-source adjacency (the reference's VBlock/CSR layout,
-    // graph/GraphDataServerMem.java adjacency arrays; SURVEY §7.2): one row
-    // per src holding the out-edge array. The exchange joins this instead
-    // of the flat edge list — the hash-join build side shrinks from |E|
-    // rows to |V| rows (measured ~15% faster per exchange round at 10M
-    // edges) and per-sender edges arrive as one contiguous array (the CSR
-    // gather), exploded after the join inside the same codegen stage.
-    //
-    // Hot/cold split (round 3; round 2 salted the WHOLE relation, which
-    // put (src, salt) into the join key and re-exchanged every sender each
-    // superstep — driver-measured slower than unsalted, BENCH_r02 skew):
-    // the cold relation keeps the plain (src) join key, so the senders
-    // side keeps its hash(vid) partitioning and the PUSH join stays
-    // exchange-free; only the ≤ p/2 hub sources move to a salted hot
-    // relation whose per-(src, salt) chunks spread over all partitions,
-    // joined against a BROADCAST of the (few) hot senders — salting then
-    // costs nothing for the cold 99.99% of the graph.
-    val hasWeight = edges.columns.contains("weight")
-    val edgeStruct =
-      if (hasWeight) struct(col("dst"), col("weight"))
-      else struct(col("dst"))
-    // Pack the adjacency WITHOUT ever materializing a hub's full out-edge
-    // list in one row or one task (round-3 plan packed ALL sources —
-    // including hubs — with one collect_list row per source, then built the
-    // salted hot relation by exploding that one row in ONE task: a
-    // 1.9M-struct array at sf0.1, gigabytes / a guaranteed 2 GB-array
-    // failure at 100x hub degrees, and the 17.4s straggler in the driver's
-    // r3 skew run). hotVids is decided from `deg` BEFORE packing, so:
-    //   cold = flat edges of non-hub sources, one collect_list row per
-    //          source, each bounded by the hub cut (~2|E|/p);
-    //   hot  = flat edges of hub sources grouped DIRECTLY by
-    //          (src, pmod(hash(dst), p)) — the hub's adjacency arrives
-    //          pre-split into p chunks of ~deg/p built by p parallel tasks;
-    //          no giant row ever exists anywhere in the plan.
-    // Lineage discipline (DeduplicateRelations cache-bust, round 2/3):
-    // The packed relation materializes as a LogicalRDD (eager ONE-ARG
-    // localCheckpoint via localCheckpointHashed — lineage-free, hash(src)
-    // layout stamped), NOT as a persist()ed view of its derivation: a persisted plan is matched by
-    // lineage, and any OTHER occurrence of the same source relations in a
-    // superstep plan (PageRank's staticBase shares the vertex lineage)
-    // trips DeduplicateRelations' attribute-id rewrite, after which the
-    // cache lookup misses and the WHOLE edge derivation re-runs inside
-    // every superstep (measured: 2.9s/superstep vs 0.25s at sf0.1 —
-    // r6 probe; the same cache-bust class as the round-2/3 hot-list bug).
-    // A LogicalRDD has no lineage to rewrite, so no plan can unhitch it.
-    val adjBase: PackedAdj =
-      if (hotVids.isEmpty) {
-        val packed = localCheckpointHashed(
-          ec.groupBy(col("src")).agg(collect_list(edgeStruct).as("_adj"))
-            .repartition(p, col("src")), Seq("src"), p)
-        setupMark("pack-cold-all")
-        PackedAdj(packed, None, hotVids)
-      } else {
-        val hotSeq = hotVids.toIndexedSeq
-        val cold = localCheckpointHashed(
-          ec.filter(!col("src").isin(hotSeq: _*))
-            .groupBy(col("src")).agg(collect_list(edgeStruct).as("_adj"))
-            .repartition(p, col("src")), Seq("src"), p)
-        setupMark("pack-cold")
-        val hot = localCheckpointHashed(
-          Pregel.saltedHot(ec, hotSeq, p, edgeStruct), Seq("src", "_salt"), p)
-        setupMark("pack-hot")
-        PackedAdj(cold, Some(hot), hotVids)
-      }
-    if (!callerCached) ec.unpersist(blocking = false)
-    // In-edge fragment relation for the shuffle-gather pull path (built
-    // lazily on the first PullShuffle superstep — most runs never pay for
-    // it): dst-keyed fragments indexed by SOURCE block, rebuilt from the
-    // already-packed out-adjacency and materialized as a LogicalRDD so no
-    // overlapping lineage with the cold relation ever enters a superstep
-    // plan (DeduplicateRelations cache-bust, rounds 2-3).
-    var inAdjCache: Option[DataFrame] = None
-    val adj = adjBase.copy(inAdjF = () => inAdjCache.getOrElse {
-      val flatCold = adjBase.cold.select(col("src"), explode(col("_adj")).as("_e"))
-      val flat = adjBase.hot match {
-        case Some(h) => flatCold.unionByName(h.select(col("src"), explode(col("_adj")).as("_e")))
-        case None => flatCold
-      }
-      val cols = Seq(col("src"), col("_e.dst").as("dst")) ++
-        (if (hasWeight) Seq(col("_e.weight").as("weight")) else Nil)
-      val ia = localCheckpointHashed(
-        Pregel.packInFragments(flat.select(cols: _*), blkLen, p, hasWeight),
-        Seq("dst"), p)
-      inAdjCache = Some(ia)
-      ia
-    })
-    val cost = new CostModel(cfg.mode, cfg.numExecutors, cfg.broadcastCapBytes)
-    val ckpt = cfg.checkpointDir.map(d => new Checkpoint(spark, d, program.name))
-    val ckptPolicy = new CheckpointPolicy
-
-    val vertsWithDeg = vertices.join(deg.select("vid", "outdeg"), Seq("vid"), "left_outer")
-      .withColumn("outdeg", coalesce(col("outdeg"), lit(0L)))
-
-    // Programs whose update() is a pure function of (static vertex cols,
-    // inbox) join against this cached, pre-partitioned relation instead of
-    // the prior state: the join is exchange-free (inbox comes out of the
-    // combine already hash(vid)-partitioned) and plan growth is linear.
-    // LogicalRDD for the same reason as the packed adjacency above: its
-    // vertex lineage would otherwise coexist with the adjacency's in every
-    // superstep plan and feed the DeduplicateRelations cache-bust.
-    val staticBase =
-      if (program.usesPriorState) None
-      else Some(localCheckpointHashed(
-        vertsWithDeg.repartition(p, col("vid")), Seq("vid"), p))
-
     // Superstep-loop execution regime: AQE OFF and shuffle width = p for
-    // the loop, restored on every exit path (the loop's catch and the
-    // normal exit both go through releaseSetupRelations). AQE's per-query-
-    // stage re-optimization adds driver round-trips to every superstep's
+    // the loop, restored by the same finally. AQE's per-query-stage
+    // re-optimization adds driver round-trips to every superstep's
     // critical path for zero benefit on plans whose shapes the kernel
     // already pins (the same reason Bench's scaling sessions run AQE-off),
     // and pinning the shuffle width keeps the combine output exactly
-    // co-partitioned with the hash(vid, p) state. Setup above (derivation
+    // co-partitioned with the hash(vid, p) state. Setup (derivation
     // aggregates, packing) stays under the session's own regime — its
     // explicit repartition(p, keys) exchanges fix the checkpointed
     // layouts regardless, and AQE's coalescing helps the derivation.
-    val confKV = Seq(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> p.toString)
-    val priorConf = confKV.map { case (k, _) => k -> spark.conf.getOption(k) }
-    def restoreConf(): Unit = priorConf.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-
-    // Drop every setup-time relation this run pinned in the block manager:
-    // the persisted cold adjacency / degree / static-base caches AND the
-    // eagerly localCheckpointed hot adjacency + in-edge fragment relations.
-    // Dataset.unpersist can't reach the latter two — their storage lives
-    // behind the checkpointed RDD, not the CacheManager, so leaving them
-    // to ContextCleaner GC leaked block-manager storage into the surviving
-    // session (ADVICE r4). Runs on BOTH the normal and the crash exit.
-    def releaseSetupRelations(): Unit = {
-      restoreConf()
-      Pregel.unpersistCheckpointed(adjBase.cold)
-      deg.unpersist(blocking = false)
-      staticBase.foreach(Pregel.unpersistCheckpointed)
-      adjBase.hot.foreach(Pregel.unpersistCheckpointed)
-      inAdjCache.foreach(Pregel.unpersistCheckpointed)
-    }
-
-    // The regime is set here and restored on every exit path from here on:
-    // the resume load and inbox regeneration run inside the same try as
-    // the loop, so a failed resume cannot leave the session AQE-off at
-    // width p either.
-    confKV.foreach { case (k, v) => spark.conf.set(k, v) }
-    // localCheckpoint each superstep: materializes the state AND truncates
-    // the iterative logical plan (otherwise analyzer/optimizer cost and
-    // driver heap grow superlinearly with superstep count). The stamped
-    // checkpoint (localCheckpointHashed) pins the partitioning to
-    // hash(vid, p) — the r5 "wobble" (the rewrite binding hash to the
-    // label alias, re-exchanging the state) is gone by construction.
-    //
+    val confKeys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val priorConf = confKeys.map(k => k -> spark.conf.getOption(k))
     // State representation (round 3, reference C2 VBlock-skip analog):
     // `base` is the last fully-materialized state; `overlays` is a short
     // list of small materialized deltas (full state schema, one per
@@ -366,29 +155,6 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
     var base: DataFrame = null
     var overlays: Vector[(DataFrame, Long)] = Vector.empty // (delta, rows)
     var deltaRowsAcc = 0L
-    val nApprox = (maxVid + 1).toDouble // dense-id |V| proxy (upper-biased when sparse)
-    def view(): DataFrame =
-      if (overlays.isEmpty) base
-      else {
-        val cols = base.columns
-        val nOv = overlays.length
-        var df = base
-        overlays.zipWithIndex.foreach { case ((ov, rows), i) =>
-          val renamed = ov.select(col("vid") +: cols.toSeq.filterNot(_ == "vid")
-            .map(c => col(c).as(s"_o${i}_$c")): _*)
-          // overlays are hash(vid)-partitioned like base, so these joins
-          // are exchange-free; tiny overlays broadcast instead (skips the
-          // per-partition hash-table build on default-config sessions)
-          val r2 = if (rows <= 100000L) broadcast(renamed) else renamed
-          df = df.join(r2, Seq("vid"), "left_outer")
-        }
-        val sel = cols.toSeq.map {
-          case "vid" => col("vid")
-          case "respond" => coalesce(col(s"_o${nOv - 1}_respond"), lit(false)).as("respond")
-          case c => coalesce(((nOv - 1) to 0 by -1).map(i => col(s"_o${i}_$c")) :+ col(c): _*).as(c)
-        }
-        df.select(sel: _*)
-      }
     def retireState(): Unit = {
       // blocking: bounds block-manager storage — async unpersist let
       // retired states pile up over long runs
@@ -397,9 +163,210 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
       overlays = Vector.empty
       deltaRowsAcc = 0L
     }
+    try {
+      // Stage the input edges once: both the degree aggregation and the CSR
+      // packing read them, and the caller usually hands us a lazy derivation
+      // (symmetrize/self-loops over the transcript graph) that would
+      // otherwise execute twice. Unpersisted right after the packed relation
+      // materializes below.
+      // If the caller already cached the edge relation (e.g. a shared
+      // derivation bundle reused across queries), don't re-persist it here —
+      // and, more importantly, don't unpersist it at the end: evicting a
+      // caller's cache would silently re-derive the relation for the next
+      // query that shares it.
+      val callerCached = edges.storageLevel != StorageLevel.NONE
+      val ec =
+        if (callerCached) edges
+        else hold(edges.persist(StorageLevel.MEMORY_AND_DISK), _.unpersist(blocking = false))
+      // per-source out-degree in ONE aggregation: the degree relation, the
+      // global degree stats AND the L5 per-block stats all derive from this
+      // single |E| pass (block aggregates roll up from the per-source rows —
+      // no second scan of the edge relation)
+      val deg = hold(ec.groupBy(col("src").as("vid")).agg(count(lit(1)).as("outdeg"))
+        .persist(StorageLevel.MEMORY_AND_DISK), _.unpersist(blocking = false))
+      // Empty-vertex guard: fail soft (empty result, no supersteps) instead of
+      // an NPE out of head() below — a user's first empty partition should not
+      // be a 500-line stack trace.
+      val maxVidRow = vertices.agg(max(col("vid"))).head()
+      if (maxVidRow.isNullAt(0)) {
+        val emptyState = program.initState(
+          vertices.join(deg, Seq("vid"), "left_outer")
+            .withColumn("outdeg", coalesce(col("outdeg"), lit(0L))))
+        return (emptyState, Seq.empty)
+      }
+      val maxVid = maxVidRow.getLong(0)
+      val blkLen = math.max(1L, (maxVid + NumBlocks) / NumBlocks)
+      // L5 edge-bound stats (reference EdgeHashBucMgr.java:25-51): per-source-
+      // block edge count, rolled up from the per-source degree relation and
+      // held on the driver (<= NumBlocks rows). Feeds the cost model's
+      // pull-fragment volume (sum of edge counts over responding blocks) —
+      // the reference's dependency-matrix sizing. The same collect yields
+      // the global edge count and max out-degree (the hub cut), so setup
+      // pays ONE stats job, not three.
+      val blkRows = deg.groupBy(expr(s"vid div $blkLen").as("blk"))
+        .agg(sum(col("outdeg")).as("cnt"), max(col("outdeg")).as("maxdeg"))
+        .collect()
+      val blkEdges: Map[Long, Long] = blkRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val edgeCount = blkEdges.valuesIterator.sum
+      val maxOutdeg = if (blkRows.isEmpty) 0L else blkRows.iterator.map(_.getLong(2)).max
+      // Scale-adaptive effective partition count (guide §2): derived from
+      // the measured edge count, capped at the configured parallelism. Every
+      // relation the superstep loop touches (packed adjacency, fragments,
+      // state, overlays) is partitioned at this width.
+      val p =
+        if (cfg.targetEdgesPerPartition <= 0) cfg.numPartitions
+        else math.min(cfg.numPartitions.toLong,
+          math.max(1L, (edgeCount + cfg.targetEdgesPerPartition - 1) / cfg.targetEdgesPerPartition)).toInt
+      val hubCut = math.max(cfg.saltMinDeg, 2L * edgeCount / math.max(1, p))
+      // At most p/2 sources can have out-degree >= 2*edges/p (they'd exceed
+      // the edge total otherwise), so the hot list is always a handful of
+      // driver-held literals. Literals — NOT a joined DataFrame: a hot-list
+      // relation appearing on BOTH sides of the exchange join trips Spark's
+      // self-join deduplication, which rewrites one side's attribute ids and
+      // silently breaks the persisted edge cache's plan matching (measured:
+      // the whole edge derivation re-ran every superstep).
+      val hotVids: Array[Long] =
+        if (cfg.saltMinDeg > 0 && maxOutdeg >= hubCut)
+          deg.filter(col("outdeg") >= hubCut).collect().map(_.getLong(0))
+        else Array.empty[Long]
+      // Packed per-source adjacency (the reference's VBlock/CSR layout,
+      // graph/GraphDataServerMem.java adjacency arrays; SURVEY §7.2): one row
+      // per src holding the out-edge array. The exchange joins this instead
+      // of the flat edge list — the hash-join build side shrinks from |E|
+      // rows to |V| rows (measured ~15% faster per exchange round at 10M
+      // edges) and per-sender edges arrive as one contiguous array (the CSR
+      // gather), exploded after the join inside the same codegen stage.
+      //
+      // Hot/cold split (round 3; round 2 salted the WHOLE relation, which
+      // put (src, salt) into the join key and re-exchanged every sender each
+      // superstep — driver-measured slower than unsalted, BENCH_r02 skew):
+      // the cold relation keeps the plain (src) join key, so the senders
+      // side keeps its hash(vid) partitioning and the PUSH join stays
+      // exchange-free; only the ≤ p/2 hub sources move to a salted hot
+      // relation whose per-(src, salt) chunks spread over all partitions,
+      // joined against a BROADCAST of the (few) hot senders — salting then
+      // costs nothing for the cold 99.99% of the graph.
+      val hasWeight = edges.columns.contains("weight")
+      val edgeStruct =
+        if (hasWeight) struct(col("dst"), col("weight"))
+        else struct(col("dst"))
+      // Pack the adjacency WITHOUT ever materializing a hub's full out-edge
+      // list in one row or one task (round-3 plan packed ALL sources —
+      // including hubs — with one collect_list row per source, then built the
+      // salted hot relation by exploding that one row in ONE task: a
+      // 1.9M-struct array at sf0.1, gigabytes / a guaranteed 2 GB-array
+      // failure at 100x hub degrees, and the 17.4s straggler in the driver's
+      // r3 skew run). hotVids is decided from `deg` BEFORE packing, so:
+      //   cold = flat edges of non-hub sources, one collect_list row per
+      //          source, each bounded by the hub cut (~2|E|/p);
+      //   hot  = flat edges of hub sources grouped DIRECTLY by
+      //          (src, pmod(hash(dst), p)) — the hub's adjacency arrives
+      //          pre-split into p chunks of ~deg/p built by p parallel tasks;
+      //          no giant row ever exists anywhere in the plan.
+      // Lineage discipline (DeduplicateRelations cache-bust, round 2/3):
+      // The packed relation materializes as a LogicalRDD (eager ONE-ARG
+      // localCheckpoint via localCheckpointHashed — lineage-free, hash(src)
+      // layout stamped), NOT as a persist()ed view of its derivation: a persisted plan is matched by
+      // lineage, and any OTHER occurrence of the same source relations in a
+      // superstep plan (PageRank's staticBase shares the vertex lineage)
+      // trips DeduplicateRelations' attribute-id rewrite, after which the
+      // cache lookup misses and the WHOLE edge derivation re-runs inside
+      // every superstep (measured: 2.9s/superstep vs 0.25s at sf0.1 —
+      // r6 probe; the same cache-bust class as the round-2/3 hot-list bug).
+      // A LogicalRDD has no lineage to rewrite, so no plan can unhitch it.
+      val adjBase: PackedAdj =
+        if (hotVids.isEmpty) {
+          val packed = hold(localCheckpointHashed(
+            ec.groupBy(col("src")).agg(collect_list(edgeStruct).as("_adj"))
+              .repartition(p, col("src")), Seq("src"), p))
+          PackedAdj(packed, None, hotVids, hasWeight)
+        } else {
+          val hotSeq = hotVids.toIndexedSeq
+          val cold = hold(localCheckpointHashed(
+            ec.filter(!col("src").isin(hotSeq: _*))
+              .groupBy(col("src")).agg(collect_list(edgeStruct).as("_adj"))
+              .repartition(p, col("src")), Seq("src"), p))
+          val hot = hold(localCheckpointHashed(
+            Pregel.saltedHot(ec, hotSeq, p, edgeStruct), Seq("src", "_salt"), p))
+          PackedAdj(cold, Some(hot), hotVids, hasWeight)
+        }
+      if (!callerCached) ec.unpersist(blocking = false)
+      // In-edge fragment relation for the shuffle-gather pull path (built
+      // lazily on the first PullShuffle superstep — most runs never pay for
+      // it): dst-keyed fragments indexed by SOURCE block, rebuilt from the
+      // already-packed out-adjacency and materialized as a LogicalRDD so no
+      // overlapping lineage with the cold relation ever enters a superstep
+      // plan (DeduplicateRelations cache-bust, rounds 2-3).
+      var inAdjCache: Option[DataFrame] = None
+      val adj = adjBase.copy(inAdjF = () => inAdjCache.getOrElse {
+        val flatCold = adjBase.cold.select(col("src"), explode(col("_adj")).as("_e"))
+        val flat = adjBase.hot match {
+          case Some(h) => flatCold.unionByName(h.select(col("src"), explode(col("_adj")).as("_e")))
+          case None => flatCold
+        }
+        val cols = Seq(col("src"), col("_e.dst").as("dst")) ++
+          (if (hasWeight) Seq(col("_e.weight").as("weight")) else Nil)
+        val ia = hold(localCheckpointHashed(
+          Pregel.packInFragments(flat.select(cols: _*), blkLen, p, hasWeight),
+          Seq("dst"), p))
+        inAdjCache = Some(ia)
+        ia
+      })
+      val cost = new CostModel(cfg.mode, cfg.broadcastCapBytes)
+      val ckpt = cfg.checkpointDir.map(d => new Checkpoint(spark, d, program.name))
+      val ckptPolicy = new CheckpointPolicy
 
-    val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetrics]()
-    val result = try {
+      val vertsWithDeg = vertices.join(deg, Seq("vid"), "left_outer")
+        .withColumn("outdeg", coalesce(col("outdeg"), lit(0L)))
+
+      // Programs whose update() is a pure function of (static vertex cols,
+      // inbox) join against this cached, pre-partitioned relation instead of
+      // the prior state: the join is exchange-free (inbox comes out of the
+      // combine already hash(vid)-partitioned) and plan growth is linear.
+      // LogicalRDD for the same reason as the packed adjacency above: its
+      // vertex lineage would otherwise coexist with the adjacency's in every
+      // superstep plan and feed the DeduplicateRelations cache-bust.
+      val staticBase =
+        if (program.usesPriorState) None
+        else Some(hold(localCheckpointHashed(
+          vertsWithDeg.repartition(p, col("vid")), Seq("vid"), p)))
+
+      // The loop regime holds from here to the finally, which covers the
+      // resume load and inbox regeneration too: a failed resume cannot leave
+      // the session AQE-off at width p.
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      spark.conf.set("spark.sql.shuffle.partitions", p.toString)
+      // localCheckpoint each superstep: materializes the state AND truncates
+      // the iterative logical plan (otherwise analyzer/optimizer cost and
+      // driver heap grow superlinearly with superstep count). The stamped
+      // checkpoint (localCheckpointHashed) pins the partitioning to
+      // hash(vid, p) — the r5 "wobble" (the rewrite binding hash to the
+      // label alias, re-exchanging the state) is gone by construction.
+      val nApprox = (maxVid + 1).toDouble // dense-id |V| proxy (upper-biased when sparse)
+      def view(): DataFrame =
+        if (overlays.isEmpty) base
+        else {
+          val cols = base.columns
+          val nOv = overlays.length
+          var df = base
+          overlays.zipWithIndex.foreach { case ((ov, rows), i) =>
+            val renamed = ov.select(col("vid") +: cols.toSeq.filterNot(_ == "vid")
+              .map(c => col(c).as(s"_o${i}_$c")): _*)
+            // overlays are hash(vid)-partitioned like base, so these joins
+            // are exchange-free; tiny overlays broadcast instead (skips the
+            // per-partition hash-table build on default-config sessions)
+            val r2 = if (rows <= 100000L) broadcast(renamed) else renamed
+            df = df.join(r2, Seq("vid"), "left_outer")
+          }
+          val sel = cols.toSeq.map {
+            case "vid" => col("vid")
+            case "respond" => coalesce(col(s"_o${nOv - 1}_respond"), lit(false)).as("respond")
+            case c => coalesce(((nOv - 1) to 0 by -1).map(i => col(s"_o${i}_$c")) :+ col(c): _*).as(c)
+          }
+          df.select(sel: _*)
+        }
+
+      val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetrics]()
       val resumed = if (cfg.resume) ckpt.flatMap(_.latest()) else None
       // A checkpoint-loaded relation has its parquet files' split layout, not
       // hash(vid, p): re-stamp it through an explicit exchange. States the
@@ -407,9 +374,8 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
       base = localCheckpointHashed(
         resumed.map(_._2).getOrElse(program.initState(vertsWithDeg)).repartition(p, col("vid")),
         Seq("vid"), p, eager = false)
-      setupMark("init-state")
 
-      var startStep = resumed.map(_._1 + 1).getOrElse(1)
+      val startStep = resumed.map(_._1 + 1).getOrElse(1)
       // metrics lineage up to the snapshot: prefixed to every subsequent
       // archive (continuous history from superstep 1 across failures);
       // run() itself returns only THIS run's supersteps.
@@ -417,7 +383,7 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
       var inbox: Option[DataFrame] = None
       if (resumed.isDefined) {
         // regenerate the inbox the checkpointed step had already sent
-        val style = cost.choose(startStep, base.filter(col("respond")).count(), 0, cfg.stateRowBytes, 1.0)
+        val style = cost.choose(startStep, base.filter(col("respond")).count(), 0, StateRowBytes, 1.0)
         inbox = Some(program.aggregate(exchange(program, base.filter(col("respond")), adj, style, Nil, blkLen)))
       }
 
@@ -447,7 +413,7 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
       // round 3 ran a second groupBy(blk)+collect job per barrier, ~half the
       // fixed cost of the 150-row 25-superstep adjtext fixtures
       // (VERDICT r3 #5).
-      val blkWords = (cfg.numBlocks + 63) / 64
+      val blkWords = (NumBlocks + 63) / 64
       // numeric columns are cast EXPLICITLY (long/double): the Observation
       // map hands back whatever type the aggregate produced, and a program
       // whose vertexAggCol/activeCol is Int/Decimal would otherwise be
@@ -528,7 +494,6 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
               case None => program.emptyInboxCols.foldLeft(joinLeft)((df, c) => df.withColumn(c._1, c._2))
             }
             st = program.update(joined, tt, jobAgg)
-            if (tt == 2 && sys.env.contains("GRAFT_EXPLAIN")) st.explain("formatted")
             if (tt < tEnd) in = Some(program.aggregate(exchange(program, st.filter(col("respond")), adj, style, Nil, blkLen)))
           }
           // ONE action per barrier: the eager localCheckpoint materializes
@@ -542,11 +507,6 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
           // the superstep's joins co-partitioned.
           newState = localCheckpointHashed(
             st.observe(obs, reportCols.head, reportCols.tail: _*), Seq("vid"), p)
-          if (sys.env.contains("GRAFT_EXPLAIN"))
-            println(s"[part] step=$t st-top=" + st.queryExecution.executedPlan.outputPartitioning)
-          if (sys.env.contains("GRAFT_PHASES"))
-            println(s"[phases] step=$t-$tEnd " + newState.queryExecution.tracker.phases
-              .map { case (k, v) => s"$k=${v.durationMs}ms" }.mkString(" "))
         }
         // obs.get blocks until the listener delivers this execution's
         // metrics — the action above has already run, so this is a
@@ -567,9 +527,8 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
         val halt = respondCount == 0L || program.halted(newJobAgg, tEnd) || tEnd == program.maxSupersteps
         // L5 fragment volume for the shuffle-gather pull estimate: exact edge
         // count over responding source blocks, from the driver-held stats.
-        val fragEdges = respondBlocks.iterator
-          .map(b => blkStats.get(b).map(_.edges).getOrElse(0L)).sum
-        style = cost.choose(tEnd, respondCount, estMsgs, cfg.stateRowBytes,
+        val fragEdges = respondBlocks.iterator.map(b => blkEdges.getOrElse(b, 0L)).sum
+        style = cost.choose(tEnd, respondCount, estMsgs, StateRowBytes,
           combineRatio = math.min(1.0, (maxVid + 1).toDouble / math.max(1L, estMsgs)),
           respondBlockEdges = fragEdges)
 
@@ -578,7 +537,7 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
         val doCkpt = ckpt.isDefined &&
           ((willCkptBoundary && (!cfg.dynamicCheckpoint || ckptPolicy.required)) || halt)
         val m = SuperstepMetrics(tEnd, style.tag, respondCount, estMsgs, newJobAgg,
-          cost.lastQ, respondBlocks.length, cfg.numBlocks, wallMs / (tEnd - t + 1), doCkpt, deltaStep)
+          cost.lastQ, respondBlocks.length, NumBlocks, wallMs / (tEnd - t + 1), doCkpt, deltaStep)
         for (tt <- t to tEnd) metrics += m.copy(superstep = tt)
 
         var senders: DataFrame = null
@@ -617,18 +576,20 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
         lastActive = activeCount
         t = tEnd + 1
       }
-      view()
+      (view(), metrics.toSeq)
     } catch {
       case e: Throwable =>
-        // a crashed run (incl. the injected-failure hook and a failed
-        // resume load) must not leak cached relations or the loop regime
-        // into the surviving session
-        releaseSetupRelations()
+        // a crashed run also drops the state it was building (the caller
+        // never sees it)
         retireState()
         throw e
+    } finally {
+      priorConf.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      held.foreach(_())
     }
-    releaseSetupRelations()
-    (result, metrics.toSeq)
   }
 
   /** Build the raw message relation msgs(vid, msg) for one exchange.
@@ -638,12 +599,12 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
    * shadow the sender's `vid` via lateral column aliasing. */
   private[pregel] def exchange(program: VertexProgram, senders: DataFrame, adj: PackedAdj,
                                style: Style, respondBlocks: Seq[Long], blkLen: Long): DataFrame = {
-    // pull-route pruning (C13): when few source blocks respond, push a
-    // block-membership predicate into the (big) edge relation scan.
-    def prune(e: DataFrame): DataFrame =
-      if (respondBlocks.nonEmpty && respondBlocks.length < cfg.numBlocks * cfg.blockPruneThreshold)
-        e.filter(expr(s"src div $blkLen").isin(respondBlocks: _*))
-      else e
+    // pull-route pruning (C13): when fewer than half the source blocks
+    // respond, push a block-membership predicate into the (big) edge
+    // relation scan.
+    val pruneBlocks = respondBlocks.nonEmpty && respondBlocks.length < Pregel.NumBlocks / 2
+    def prune(e: DataFrame, blk: Column = expr(s"src div $blkLen")): DataFrame =
+      if (pruneBlocks) e.filter(blk.isin(respondBlocks: _*)) else e
     // Name-based (not Dataset-qualified) refs: the edge relation appears
     // once per fused superstep in a single plan tree, and qualified refs
     // would trip the ambiguous-self-join detector. `_graft_src` keeps the
@@ -651,15 +612,12 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
     val s2 = senders.withColumn("_graft_src", col("vid"))
     val cond = col("_graft_src") === col("src")
     val cold = prune(adj.cold)
-    val hasWeight = adj.cold.schema("_adj").dataType
-      .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
-      .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.contains("weight")
     // CSR gather: unpack the matched source's out-edge array (one explode
     // per sender row, inside the same codegen stage as the join).
     def unpack(joined: DataFrame): DataFrame = {
       val perEdge0 = joined.withColumn("_edge", explode(col("_adj")))
         .withColumn("dst", col("_edge.dst"))
-      if (hasWeight) perEdge0.withColumn("weight", col("_edge.weight")) else perEdge0
+      if (adj.hasWeight) perEdge0.withColumn("weight", col("_edge.weight")) else perEdge0
     }
     val perEdge = style match {
       case Pull =>
@@ -674,13 +632,9 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
         // (dependency-matrix prune), explode to flat in-edges, and join
         // the respond relation — the senders shuffle once on src, the
         // fragment scan stays local, and no broadcast cap applies.
-        val ia0 = adj.inAdjF()
-        val ia =
-          if (respondBlocks.nonEmpty && respondBlocks.length < cfg.numBlocks * cfg.blockPruneThreshold)
-            ia0.filter(col("_sblk").isin(respondBlocks: _*))
-          else ia0
+        val ia = prune(adj.inAdjF(), col("_sblk"))
         val fcols = Seq(col("dst"), col("_ie.src").as("src")) ++
-          (if (hasWeight) Seq(col("_ie.weight").as("weight")) else Nil)
+          (if (adj.hasWeight) Seq(col("_ie.weight").as("weight")) else Nil)
         val flat = ia.select(col("dst"), explode(col("_iadj")).as("_ie")).select(fcols: _*)
         flat.join(s2.hint("shuffle_hash"), cond)
       case Push =>
@@ -705,6 +659,13 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
 }
 
 private[graft] object Pregel {
+  /** VBlock count (reference Constants.java:84): vids split into this many
+   * contiguous source blocks for the L5 edge stats, the barrier's
+   * respond-block bitmap and pull-route pruning. */
+  private[pregel] val NumBlocks = 256
+  /** Estimated bytes per respond-relation row (cost-model input). */
+  private val StateRowBytes = 32
+
   /** Free the block-manager storage behind an eagerly localCheckpointed
    * DataFrame. `Dataset.unpersist` can't: the storage belongs to the
    * checkpoint's RDD, which never enters the CacheManager — it must be
@@ -771,16 +732,13 @@ private[graft] object Pregel {
   }
 }
 
-/** Per-source-block edge-bound stats (reference L5, EdgeHashBucMgr.java:
- * 25-51): edge count + dst id bounds for one source block. */
-private[pregel] final case class BlockEdgeStats(edges: Long, dstMin: Long, dstMax: Long)
-
 /** Packed CSR adjacency: `cold` = (src, _adj) hash-partitioned on src;
  * `hot` = the hub sources' edges as (src, _salt, _adj) chunks spread over
  * all partitions by hash(dst) salt (present only when hubs exist);
- * `inAdjF` = memoized provider of the dst-keyed in-edge fragment relation
- * for shuffle-gather PULL (built on first use). */
+ * `hasWeight` = the `_adj` structs carry an edge weight; `inAdjF` =
+ * memoized provider of the dst-keyed in-edge fragment relation for
+ * shuffle-gather PULL (built on first use). */
 private[pregel] final case class PackedAdj(
-    cold: DataFrame, hot: Option[DataFrame], hotVids: Array[Long],
+    cold: DataFrame, hot: Option[DataFrame], hotVids: Array[Long], hasWeight: Boolean,
     inAdjF: () => DataFrame =
       () => throw new IllegalStateException("in-adjacency fragments not built"))

@@ -44,7 +44,12 @@ object PartitionedCheckpoint {
 
   /** `df.localCheckpoint(eager)` with `hash(keys, p)` stamped on the
    * resulting LogicalRDD. Falls back to the plain checkpoint when the
-   * plan shape is unexpected or a key column is missing. */
+   * plan shape is unexpected or a key column is missing. Throws
+   * IllegalStateException (after freeing the checkpoint) when the
+   * relation does not have exactly p partitions: such a stamp is false
+   * by construction, and a co-partitioned join over it would fail far
+   * from here ("Can't zip RDDs with unequal numbers of partitions") or
+   * silently mis-join. */
   def localCheckpointHashed(df: DataFrame, keys: Seq[String], p: Int,
                             eager: Boolean = true): DataFrame = {
     val ck = df.localCheckpoint(eager)
@@ -52,7 +57,12 @@ object PartitionedCheckpoint {
       case lr: LogicalRDD =>
         val attrs: Seq[Option[Attribute]] = keys.map(k => lr.output.find(_.name == k))
         if (attrs.exists(_.isEmpty)) ck
-        else {
+        else if (lr.rdd.getNumPartitions != p) {
+          val n = lr.rdd.getNumPartitions
+          lr.rdd.unpersist(false)
+          throw new IllegalStateException(
+            s"cannot stamp hash(${keys.mkString(", ")}, $p) on a relation with $n partitions")
+        } else {
           // copy()'s curried (session, originStats, originConstraints)
           // list has no defaults; carry the originals through so the
           // stamped relation keeps its statistics (join sizing).

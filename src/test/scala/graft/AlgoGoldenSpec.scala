@@ -10,7 +10,7 @@ import graft.algos._
 class AlgoGoldenSpec extends SparkTestBase {
 
   private def pregel(mode: ExchangeMode = Hybrid) =
-    new Pregel(spark, PregelConfig(numPartitions = 4, numBlocks = 8, mode = mode))
+    new Pregel(spark, PregelConfig(numPartitions = 4, mode = mode))
 
   private def ccOf(n: Long, undirected: Seq[(Long, Long)]): Map[Long, Long] =
     ConnectedComponents.labels(pregel(), vertDF(n), edgeDF(undirected), 20)

@@ -1,6 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.{AnalysisException, Observation}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.CacheEntries
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.pregel._
 import graft.algos._
 
@@ -122,6 +127,81 @@ class KernelSpec extends SparkTestBase {
     assert(keys.map(spark.conf.getOption) == before)
   }
 
+  test("a setup failure releases every relation the run cached so far") {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    val edges = edgeDF(Seq((0L, 1L), (1L, 0L)))
+    val before = CacheEntries.count(spark)
+    // no `vid` column: the max(vid) probe fails after the staged edges and
+    // the degree relation are already persisted
+    intercept[AnalysisException] {
+      new Pregel(spark, PregelConfig(numPartitions = 4))
+        .run(new ConnectedComponents(3), vertDF(2).withColumnRenamed("vid", "id"), edges)
+    }
+    assert(cm.lookupCachedData(edges.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isEmpty,
+      "the staged edge relation is still cached")
+    val after = CacheEntries.count(spark)
+    assert(after == before, s"cache entries: $before before, $after after")
+  }
+
+  test("every superstep from 2 on runs exactly one shuffle Exchange: the message combine") {
+    // the barrier's eager localCheckpoint is an action, so the listener sees
+    // its executed plan; the observe() carrying the superstep report marks it
+    val plans = scala.collection.mutable.ArrayBuffer[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val plan = qe.executedPlan.toString
+        if (plan.contains("CollectMetrics") && plan.contains("_respond")) plans.synchronized(plans += plan)
+      }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    def barrierPlans(run: => Seq[SuperstepMetrics]): (Seq[String], Seq[SuperstepMetrics]) = {
+      plans.synchronized(plans.clear())
+      spark.listenerManager.register(listener)
+      try {
+        val metrics = run
+        // listener events arrive in order: once this later observation is
+        // delivered, every barrier before it has been recorded
+        val flush = Observation()
+        spark.range(1).observe(flush, count(lit(1))).collect()
+        flush.get
+        (plans.synchronized(plans.toList), metrics)
+      } finally spark.listenerManager.unregister(listener)
+    }
+    def shuffles(plan: String): Int = "(?<!Broadcast)Exchange".r.findAllIn(plan).length
+    val (vids, directed) = RefOracle.randomGraph(60, 150, 5L)
+    val sym = (directed ++ directed.map(_.swap)).distinct
+    val srcs = directed.map(_._1).toSet
+    val prEdges = edgeDF(directed ++ vids.filterNot(srcs).map(v => (v, v)))
+    val verts = vertDF(vids.size.toLong)
+    for (mode <- Seq(ForcePush, Hybrid)) {
+      val pregel = new Pregel(spark, PregelConfig(numPartitions = 4, mode = mode))
+      for ((name, run) <- Seq[(String, () => Seq[SuperstepMetrics])](
+          "pagerank" -> (() => pregel.run(new PageRank(vids.size.toLong, 6), verts, prEdges)._2),
+          "cc" -> (() => pregel.run(new ConnectedComponents(20), verts, edgeDF(sym))._2))) {
+        val (barriers, metrics) = barrierPlans(run())
+        assert(barriers.length == metrics.length, s"$name $mode: one barrier per superstep")
+        barriers.zip(metrics).drop(1).foreach { case (plan, m) =>
+          assert(shuffles(plan) == 1,
+            s"$name $mode superstep ${m.superstep} (${m.style}): ${shuffles(plan)} shuffle exchanges\n$plan")
+        }
+      }
+    }
+  }
+
+  test("respond-block bitmap decodes all four words: one block per vertex below vid 256") {
+    // vids < 256 give blkLen = 1, so every vertex is its own block and the
+    // respond set's blocks span bitmap words 0-3
+    val (vids, directed) = RefOracle.randomGraph(250, 400, 13L)
+    val sym = (directed ++ directed.map(_.swap)).distinct
+    val (_, metrics) = new Pregel(spark, PregelConfig(numPartitions = 4))
+      .run(new ConnectedComponents(3), vertDF(vids.size.toLong), edgeDF(sym))
+    val first = metrics.head
+    assert(first.superstep == 1 && first.numBlocks == 256)
+    assert(first.respondCount == 250L, "every vertex responds in CC's first superstep")
+    assert(first.activeBlocks == first.respondCount,
+      s"activeBlocks ${first.activeBlocks} != responding vertices ${first.respondCount}")
+  }
+
   test("checkpoint metadata carries per-partition lineage and metrics") {
     val dir = Files.createTempDirectory("graft-ckpt2").toString
     val verts = vertDF(10)
@@ -147,7 +227,7 @@ class KernelSpec extends SparkTestBase {
   }
 
   test("cost model: dead-band keeps style, switch locks for w supersteps, cap forces push") {
-    val cm = new CostModel(Hybrid, numExecutors = 4, broadcastCapBytes = 1000)
+    val cm = new CostModel(Hybrid, broadcastCapBytes = 1000)
     // superstep <= 2: never switches (starts Pull)
     assert(cm.choose(1, 10, 10, 10, 1.0) == Pull)
     assert(cm.choose(2, 10, 10, 10, 1.0) == Pull)
@@ -162,30 +242,6 @@ class KernelSpec extends SparkTestBase {
     // immediately try to force back: locked
     val s6 = cm.choose(6, 8, 0, 10, 1.0)
     assert(s6 == Pull, "switch interval must lock the style")
-  }
-
-  test("mini-superstep estimator (C17): per-step miniQ decision, no lock, pull-biased") {
-    val cm = new CostModel(MiniHybrid, numExecutors = 4, broadcastCapBytes = 16L << 20)
-    // tiny flow -> pull (and the pull bias holds even when push is mildly cheaper)
-    assert(cm.choose(1, 10, 10, 10, 1.0) == Pull)
-    // big respond relation, few messages: broadcasting to every executor
-    // costs far more than shuffling -> push clears the pull-biased margin
-    assert(cm.choose(2, 50000, 10, 20, 1.0) == Push)
-    // flips straight back: mini mode has NO switch lock (per-superstep decision)
-    assert(cm.choose(3, 10, 10, 10, 1.0) == Pull)
-    // respond relation over the broadcast cap -> push regardless
-    val cm2 = new CostModel(MiniHybrid, numExecutors = 4, broadcastCapBytes = 1000)
-    assert(cm2.choose(4, 200000, 10, 10, 1.0) == Push)
-  }
-
-  test("mini-superstep mode produces identical results (style parity)") {
-    val (vids, directed) = RefOracle.randomGraph(20, 40, 9L)
-    val sym = (directed ++ directed.map(_.swap)).distinct
-    val verts = vertDF(vids.size.toLong)
-    def cc(mode: ExchangeMode) = ConnectedComponents.labels(
-      new Pregel(spark, PregelConfig(4, mode = mode)), verts, edgeDF(sym), 8)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cc(MiniHybrid) == cc(Hybrid))
   }
 
   test("dynamic checkpoint policy: first boundary archives, cheap steps skip, recompute debt re-arms") {

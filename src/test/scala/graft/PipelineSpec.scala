@@ -24,7 +24,7 @@ class PipelineSpec extends SparkTestBase {
 
   test("dedup clusters: components of the pair graph labeled min doc_id; singletons self") {
     val p = new graft.pregel.Pregel(spark,
-      graft.pregel.PregelConfig(numPartitions = 4, numBlocks = 8))
+      graft.pregel.PregelConfig(numPartitions = 4))
     val cl = Dedup.clusters(p, docs, 16, 4, 0.2, 8)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cl.size == docs.count())

@@ -9,7 +9,7 @@ import graft.algos._
 class RandomOracleSpec extends SparkTestBase {
 
   private def pregel(mode: ExchangeMode) =
-    new Pregel(spark, PregelConfig(numPartitions = 4, numBlocks = 8, mode = mode))
+    new Pregel(spark, PregelConfig(numPartitions = 4, mode = mode))
 
   for (seed <- Seq(1L, 2L, 7L); mode <- Seq(ForcePush, ForcePull)) {
     test(s"random graph seed=$seed mode=$mode: all algorithms match RefOracle") {

@@ -60,6 +60,12 @@ class PartitionedCheckpointSpec extends AnyFunSuite {
     assert(ck.count() == 10)
   }
 
+  test("stamping a width other than the relation's partition count fails loudly") {
+    val df = spark.range(100).select(col("id").as("vid")).repartition(3, col("vid"))
+    val ex = intercept[IllegalStateException](PartitionedCheckpoint.localCheckpointHashed(df, Seq("vid"), 9))
+    assert(ex.getMessage.contains("3 partitions"), ex.getMessage)
+  }
+
   test("kernel superstep results are identical with stamping active (CC golden)") {
     // end-to-end: the stamp claims layouts — a false claim would mis-join
     // and change labels; compare against the plain reference iterate

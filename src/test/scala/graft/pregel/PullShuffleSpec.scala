@@ -12,23 +12,20 @@ class PullShuffleSpec extends graft.SparkTestBase {
 
   test("cost model three-way: above-cap respond picks shuffle gather when fragments win") {
     // capped + tiny fragment volume vs huge un-combinable message volume -> PullShuffle
-    val a = new CostModel(Hybrid, numExecutors = 4, broadcastCapBytes = 1000)
+    val a = new CostModel(Hybrid, broadcastCapBytes = 1000)
     assert(a.choose(1, 1000, 10000000L, 10, 1.0, respondBlockEdges = 100L) == PullShuffle)
     // capped + fragment scan dwarfs messages -> Push
-    val b = new CostModel(Hybrid, numExecutors = 4, broadcastCapBytes = 1000)
+    val b = new CostModel(Hybrid, broadcastCapBytes = 1000)
     assert(b.choose(1, 1000, 10, 10, 1.0, respondBlockEdges = 100000000L) == Push)
     // capped + no fragment stats -> Push hard fallback (rounds 2-3 behavior)
-    val c = new CostModel(Hybrid, numExecutors = 4, broadcastCapBytes = 1000)
+    val c = new CostModel(Hybrid, broadcastCapBytes = 1000)
     assert(c.choose(1, 1000, 10000000L, 10, 1.0) == Push)
     // the Pull <-> PullShuffle flip is mechanical (cap), not a style
     // switch: staying in the pull family across a cap crossing must not
     // engage the switch lock
-    val d = new CostModel(Hybrid, numExecutors = 4, broadcastCapBytes = 1000)
+    val d = new CostModel(Hybrid, broadcastCapBytes = 1000)
     assert(d.choose(1, 10, 10, 10, 1.0, 50L) == Pull) // under cap
     assert(d.choose(2, 1000, 10000000L, 10, 1.0, 100L) == PullShuffle) // over cap, stays pull family
-    // MiniHybrid: per-step decision may pick the shuffle gather above cap
-    val e = new CostModel(MiniHybrid, numExecutors = 4, broadcastCapBytes = 1000)
-    assert(e.choose(1, 1000, 10000000L, 10, 1.0, 100L) == PullShuffle)
   }
 
   test("shuffle-gather pull matches push end-to-end above the broadcast cap") {

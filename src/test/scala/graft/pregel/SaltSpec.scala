@@ -73,8 +73,8 @@ class SaltSpec extends graft.SparkTestBase {
     def plan(adj: PackedAdj): String =
       pregel.exchange(prog, state.filter(col("respond")), adj, Push, Nil, 100L)
         .queryExecution.executedPlan.toString
-    val unsaltedPlan = plan(PackedAdj(coldAll, None, Array.empty))
-    val saltedPlan = plan(PackedAdj(cold, Some(hot), Array(0L)))
+    val unsaltedPlan = plan(PackedAdj(coldAll, None, Array.empty, hasWeight = false))
+    val saltedPlan = plan(PackedAdj(cold, Some(hot), Array(0L), hasWeight = false))
     def shuffles(s: String): Int = "(?<!Broadcast)Exchange".r.findAllIn(s).length
     assert(saltedPlan.contains("BroadcastHashJoin"),
       s"hot senders must broadcast-join the salted chunks:\n$saltedPlan")
