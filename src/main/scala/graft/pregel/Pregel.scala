@@ -1,6 +1,6 @@
 package graft.pregel
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.PartitionedCheckpoint.localCheckpointHashed
 import org.apache.spark.storage.StorageLevel
@@ -38,7 +38,8 @@ case class PregelConfig(
     resume: Boolean = false,
     /** Test hook mirroring the reference's failure injection
      * (BSPJob.setFailedIteration:584-595, used BSPTask.java:828-833):
-     * throw at the START of this superstep, before its barrier — the
+     * throw at the START of the barrier group holding this superstep (the
+     * superstep itself when unfused), before its barrier — the
      * recovery spec kills a run between dynamic-policy checkpoints with
      * delta overlays in flight and resumes it. */
     failAtSuperstep: Option[Int] = None,
@@ -144,25 +145,7 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
     // layouts regardless, and AQE's coalescing helps the derivation.
     val confKeys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     val priorConf = confKeys.map(k => k -> spark.conf.getOption(k))
-    // State representation (round 3, reference C2 VBlock-skip analog):
-    // `base` is the last fully-materialized state; `overlays` is a short
-    // list of small materialized deltas (full state schema, one per
-    // delta superstep, newest last). The logical state is base overridden
-    // by overlays newest-first; respond comes from the NEWEST overlay
-    // alone (a vertex responds only in the superstep that updated it).
-    // Full-update supersteps compact: they materialize the merged view
-    // and clear the overlays.
-    var base: DataFrame = null
-    var overlays: Vector[(DataFrame, Long)] = Vector.empty // (delta, rows)
-    var deltaRowsAcc = 0L
-    def retireState(): Unit = {
-      // blocking: bounds block-manager storage — async unpersist let
-      // retired states pile up over long runs
-      if (base != null) base.unpersist(blocking = true)
-      overlays.foreach(_._1.unpersist(blocking = true))
-      overlays = Vector.empty
-      deltaRowsAcc = 0L
-    }
+    val store = new StateStore
     try {
       // Stage the input edges once: both the degree aggregation and the CSR
       // packing read them, and the caller usually hands us a lazy derivation
@@ -274,22 +257,13 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
       // every superstep (measured: 2.9s/superstep vs 0.25s at sf0.1 —
       // r6 probe; the same cache-bust class as the round-2/3 hot-list bug).
       // A LogicalRDD has no lineage to rewrite, so no plan can unhitch it.
-      val adjBase: PackedAdj =
-        if (hotVids.isEmpty) {
-          val packed = hold(localCheckpointHashed(
-            ec.groupBy(col("src")).agg(collect_list(edgeStruct).as("_adj"))
-              .repartition(p, col("src")), Seq("src"), p))
-          PackedAdj(packed, None, hotVids, hasWeight)
-        } else {
-          val hotSeq = hotVids.toIndexedSeq
-          val cold = hold(localCheckpointHashed(
-            ec.filter(!col("src").isin(hotSeq: _*))
-              .groupBy(col("src")).agg(collect_list(edgeStruct).as("_adj"))
-              .repartition(p, col("src")), Seq("src"), p))
-          val hot = hold(localCheckpointHashed(
-            Pregel.saltedHot(ec, hotSeq, p, edgeStruct), Seq("src", "_salt"), p))
-          PackedAdj(cold, Some(hot), hotVids, hasWeight)
-        }
+      val hotSeq = hotVids.toIndexedSeq
+      val cold = hold(localCheckpointHashed(
+        (if (hotVids.isEmpty) ec else ec.filter(!col("src").isin(hotSeq: _*)))
+          .groupBy(col("src")).agg(collect_list(edgeStruct).as("_adj"))
+          .repartition(p, col("src")), Seq("src"), p))
+      val hot = if (hotVids.isEmpty) None else Some(hold(localCheckpointHashed(
+        Pregel.saltedHot(ec, hotSeq, p, edgeStruct), Seq("src", "_salt"), p)))
       if (!callerCached) ec.unpersist(blocking = false)
       // In-edge fragment relation for the shuffle-gather pull path (built
       // lazily on the first PullShuffle superstep — most runs never pay for
@@ -297,20 +271,13 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
       // already-packed out-adjacency and materialized as a LogicalRDD so no
       // overlapping lineage with the cold relation ever enters a superstep
       // plan (DeduplicateRelations cache-bust, rounds 2-3).
-      var inAdjCache: Option[DataFrame] = None
-      val adj = adjBase.copy(inAdjF = () => inAdjCache.getOrElse {
-        val flatCold = adjBase.cold.select(col("src"), explode(col("_adj")).as("_e"))
-        val flat = adjBase.hot match {
-          case Some(h) => flatCold.unionByName(h.select(col("src"), explode(col("_adj")).as("_e")))
-          case None => flatCold
-        }
+      val adj = new PackedAdj(cold, hot, hotVids, hasWeight, {
+        val flat = (cold +: hot.toSeq).map(_.select(col("src"), explode(col("_adj")).as("_e")))
+          .reduce(_ unionByName _)
         val cols = Seq(col("src"), col("_e.dst").as("dst")) ++
           (if (hasWeight) Seq(col("_e.weight").as("weight")) else Nil)
-        val ia = hold(localCheckpointHashed(
-          Pregel.packInFragments(flat.select(cols: _*), blkLen, p, hasWeight),
-          Seq("dst"), p))
-        inAdjCache = Some(ia)
-        ia
+        hold(localCheckpointHashed(
+          Pregel.packInFragments(flat.select(cols: _*), blkLen, p, hasWeight), Seq("dst"), p))
       })
       val cost = new CostModel(cfg.mode, cfg.broadcastCapBytes)
       val ckpt = cfg.checkpointDir.map(d => new Checkpoint(spark, d, program.name))
@@ -336,58 +303,22 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
       // the session AQE-off at width p.
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-      // localCheckpoint each superstep: materializes the state AND truncates
-      // the iterative logical plan (otherwise analyzer/optimizer cost and
-      // driver heap grow superlinearly with superstep count). The stamped
-      // checkpoint (localCheckpointHashed) pins the partitioning to
-      // hash(vid, p) — the r5 "wobble" (the rewrite binding hash to the
-      // label alias, re-exchanging the state) is gone by construction.
       val nApprox = (maxVid + 1).toDouble // dense-id |V| proxy (upper-biased when sparse)
-      def view(): DataFrame =
-        if (overlays.isEmpty) base
-        else {
-          val cols = base.columns
-          val nOv = overlays.length
-          var df = base
-          overlays.zipWithIndex.foreach { case ((ov, rows), i) =>
-            val renamed = ov.select(col("vid") +: cols.toSeq.filterNot(_ == "vid")
-              .map(c => col(c).as(s"_o${i}_$c")): _*)
-            // overlays are hash(vid)-partitioned like base, so these joins
-            // are exchange-free; tiny overlays broadcast instead (skips the
-            // per-partition hash-table build on default-config sessions)
-            val r2 = if (rows <= 100000L) broadcast(renamed) else renamed
-            df = df.join(r2, Seq("vid"), "left_outer")
-          }
-          val sel = cols.toSeq.map {
-            case "vid" => col("vid")
-            case "respond" => coalesce(col(s"_o${nOv - 1}_respond"), lit(false)).as("respond")
-            case c => coalesce(((nOv - 1) to 0 by -1).map(i => col(s"_o${i}_$c")) :+ col(c): _*).as(c)
-          }
-          df.select(sel: _*)
-        }
-
       val metrics = scala.collection.mutable.ArrayBuffer[SuperstepMetrics]()
       val resumed = if (cfg.resume) ckpt.flatMap(_.latest()) else None
       // A checkpoint-loaded relation has its parquet files' split layout, not
       // hash(vid, p): re-stamp it through an explicit exchange. States the
       // loop itself saved never come back from disk (save only writes).
-      base = localCheckpointHashed(
+      store.replace(localCheckpointHashed(
         resumed.map(_._2).getOrElse(program.initState(vertsWithDeg)).repartition(p, col("vid")),
-        Seq("vid"), p, eager = false)
+        Seq("vid"), p, eager = false))
 
       val startStep = resumed.map(_._1 + 1).getOrElse(1)
       // metrics lineage up to the snapshot: prefixed to every subsequent
       // archive (continuous history from superstep 1 across failures);
       // run() itself returns only THIS run's supersteps.
       val priorMetrics: Seq[SuperstepMetrics] = resumed.map(_._4).getOrElse(Seq.empty)
-      var inbox: Option[DataFrame] = None
-      if (resumed.isDefined) {
-        // regenerate the inbox the checkpointed step had already sent
-        val style = cost.choose(startStep, base.filter(col("respond")).count(), 0, StateRowBytes, 1.0)
-        inbox = Some(program.aggregate(exchange(program, base.filter(col("respond")), adj, style, Nil, blkLen)))
-      }
 
-      var jobAgg = resumed.map(_._3).getOrElse(0.0)
       // deltaFilter programs must not fuse: a delta superstep applies
       // update() exactly once, so fuse>1 would skip supersteps (today all
       // deltaFilter programs are MsgDepend and land at 1 anyway — this makes
@@ -403,57 +334,32 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
         if (program.usesPriorState || program.updateRule != UpdateAll ||
           program.deltaFilter.isDefined || edgeCount < cfg.fuseMinEdges) 1
         else math.max(1, cfg.fusedSupersteps)
-      // Superstep report (VerBlockBeta analog) as OBSERVED metrics: respond
-      // count, est. messages (sum of respond out-degrees), task aggregate,
-      // row count, active count, plus the responding-block set encoded as a
-      // bit_or bitmap (numBlocks bits in ceil(numBlocks/64) longs — bitwise
-      // aggregation is deterministic, which CollectMetrics requires, where
-      // collect_set is not). The metrics ride the materialization action
-      // itself via df.observe(), so one superstep costs exactly ONE job —
-      // round 3 ran a second groupBy(blk)+collect job per barrier, ~half the
-      // fixed cost of the 150-row 25-superstep adjtext fixtures
-      // (VERDICT r3 #5).
-      val blkWords = (NumBlocks + 63) / 64
-      // numeric columns are cast EXPLICITLY (long/double): the Observation
-      // map hands back whatever type the aggregate produced, and a program
-      // whose vertexAggCol/activeCol is Int/Decimal would otherwise be
-      // silently read as 0 by the typed extraction below (ADVICE r4)
-      val reportCols: Seq[Column] =
-        Seq(
-          sum(when(col("respond"), 1L).otherwise(0L)).cast("long").as("_respond"),
-          sum(when(col("respond"), col("outdeg")).otherwise(0L)).cast("long").as("_estMsgs"),
-          sum(program.vertexAggCol).cast("double").as("_vagg"),
-          count(lit(1)).cast("long").as("_rows"),
-          sum(program.activeCol).cast("long").as("_active")) ++
-          // integer div: exact beyond 2^53 vids
-          (0 until blkWords).map(w => expr(
-            s"bit_or(if(respond and (vid div $blkLen) div 64 = $w, " +
-              s"shiftleft(1L, cast((vid div $blkLen) % 64 as int)), 0L))").as(s"_rb$w"))
-      // null = empty input (sum over zero rows); any OTHER unexpected type
-      // is a bug in reportCols' casts and must throw, not read as 0 and
-      // silently corrupt halting/convergence
-      def longOf(m: Map[String, Any], k: String): Long = m.get(k) match {
-        case Some(v: Long) => v
-        case Some(null) | None => 0L
-        case Some(v) => throw new IllegalStateException(
-          s"superstep report $k: expected Long, got ${v.getClass.getName} ($v)")
+      val reportCols = BarrierReport.columns(program, blkLen)
+
+      // the exchange from `from`'s responding rows, combined into an inbox
+      def send(from: DataFrame, style: Style, blocks: Seq[Long]): DataFrame =
+        program.aggregate(exchange(program, from.filter(col("respond")), adj, style, blocks, blkLen))
+      // hash join, not sort-merge: both sides are already hash(vid, p)
+      // co-partitioned, so SMJ's only addition is two per-superstep sorts
+      // (r6 plan audit); a small inbox broadcasts instead.
+      def withInbox(left: DataFrame, inbox: Option[DataFrame], bcast: Boolean): DataFrame = inbox match {
+        case Some(ib) =>
+          val renamed = ib.withColumnRenamed("vid", "_mvid")
+          left.join(if (bcast) broadcast(renamed) else renamed.hint("shuffle_hash"),
+            col("vid") === col("_mvid"), "left_outer").drop("_mvid")
+        case None => program.emptyInboxCols.foldLeft(left)((df, c) => df.withColumn(c._1, c._2))
       }
-      def respondBlocksOf(m: Map[String, Any]): Seq[Long] =
-        (0 until blkWords).flatMap { w =>
-          val bits = longOf(m, s"_rb$w")
-          (0 until 64).collect { case b if (bits >> b & 1L) == 1L => w * 64L + b }
-        }
-      var t = startStep
-      var done = false
-      var style: Style = Pull
-      var lastEstMsgs = Long.MaxValue // activity bound for the NEXT update
-      var lastActive = 0L
-      while (!done && t <= program.maxSupersteps) {
-        if (cfg.failAtSuperstep.contains(t))
-          throw new RuntimeException(s"injected failure at superstep $t (failAtSuperstep test hook)")
+
+      // One barrier: supersteps t..tEnd (fused into one lazy plan) run
+      // against `inbox`, sent in `style` by the previous barrier.
+      @scala.annotation.tailrec
+      def superstep(t: Int, inbox: Option[DataFrame], style: Style, jobAgg: Double,
+                    prev: Option[BarrierReport]): Unit = if (t <= program.maxSupersteps) {
         val t0 = System.nanoTime()
-        // fuse supersteps t..tEnd into one lazy plan (barrier at tEnd)
         val tEnd = math.min(t + fuse - 1, program.maxSupersteps)
+        cfg.failAtSuperstep.filter(f => t <= f && f <= tEnd).foreach { f =>
+          throw new RuntimeException(s"injected failure at superstep $f (failAtSuperstep test hook)")
+        }
         val willCkptBoundary = ckpt.isDefined &&
           tEnd / cfg.checkpointEvery > (t - 1) / cfg.checkpointEvery
         // Delta superstep (C2 skip): only when the program declares the
@@ -463,125 +369,74 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
         // above): a delta step applies update() exactly once, so running it
         // under fuse>1 would silently skip supersteps — guard it anyway.
         val deltaStep = cfg.deltaThreshold > 0 && program.deltaFilter.isDefined &&
-          fuse == 1 && inbox.isDefined && t > startStep && !willCkptBoundary &&
-          lastEstMsgs + lastActive <= cfg.deltaThreshold * nApprox &&
-          overlays.length < cfg.maxOverlays &&
-          deltaRowsAcc <= 0.25 * nApprox
-        var newState: DataFrame = null // full mode only
-        var newDelta: DataFrame = null // delta mode only
-        val obs = org.apache.spark.sql.Observation()
-        if (deltaStep) {
-          val ib = inbox.get.withColumnRenamed("vid", "_mvid")
-          // hash join, not sort-merge: both sides are already hash(vid, p)
-          // co-partitioned, so SMJ's only addition is two per-superstep sorts
-          val ibr = if (lastEstMsgs <= 100000L) broadcast(ib) else ib.hint("shuffle_hash")
-          val joinedAll = view().join(ibr, col("vid") === col("_mvid"), "left_outer").drop("_mvid")
-          val touched = joinedAll.filter(program.deltaFilter.get)
-          newDelta = localCheckpointHashed(
-            program.update(touched, t, jobAgg)
-              .observe(obs, reportCols.head, reportCols.tail: _*), Seq("vid"), p)
-        } else {
-          var st = view()
-          var in = inbox
-          for (tt <- t to tEnd) {
-            val joinLeft = staticBase.getOrElse(st)
-            val joined = in match {
-              // shuffle_hash: both sides hash(vid, p) co-partitioned — SMJ
-              // would only add two per-superstep sorts (r6 plan audit)
-              case Some(ib) => joinLeft.join(
-                ib.withColumnRenamed("vid", "_mvid").hint("shuffle_hash"),
-                col("vid") === col("_mvid"), "left_outer").drop("_mvid")
-              case None => program.emptyInboxCols.foldLeft(joinLeft)((df, c) => df.withColumn(c._1, c._2))
+          fuse == 1 && !willCkptBoundary && store.hasRoom(cfg.maxOverlays, nApprox) &&
+          prev.exists(r => r.estMsgs + r.active <= cfg.deltaThreshold * nApprox)
+        // A delta step materializes only the touched rows, as an overlay; a
+        // full step rewrites the whole state (or, for a static-base program,
+        // rebuilds it from the static columns).
+        val stepped =
+          if (deltaStep)
+            program.update(withInbox(store.view, inbox, bcast = prev.get.estMsgs <= 100000L)
+              .filter(program.deltaFilter.get), t, jobAgg)
+          else {
+            def fused(tt: Int, st: DataFrame, in: Option[DataFrame]): DataFrame = {
+              val updated = program.update(withInbox(staticBase.getOrElse(st), in, bcast = false), tt, jobAgg)
+              if (tt == tEnd) updated else fused(tt + 1, updated, Some(send(updated, style, Nil)))
             }
-            st = program.update(joined, tt, jobAgg)
-            if (tt < tEnd) in = Some(program.aggregate(exchange(program, st.filter(col("respond")), adj, style, Nil, blkLen)))
+            fused(t, store.view, inbox)
           }
-          // ONE action per barrier: the eager localCheckpoint materializes
-          // the state (and truncates lineage — the reference's
-          // double-buffered value files, GraphDataServerDisk.java:1222-1258)
-          // and the observed metrics ride the same job.
-          // one-arg overload ONLY: localCheckpoint(eager, storageLevel)
-          // builds a LogicalRDD with UnknownPartitioning (verified via
-          // explain), which silently re-exchanges the state in every
-          // downstream join; the one-arg form preserves hash(vid) and keeps
-          // the superstep's joins co-partitioned.
-          newState = localCheckpointHashed(
-            st.observe(obs, reportCols.head, reportCols.tail: _*), Seq("vid"), p)
-        }
+        // ONE action per barrier: the eager localCheckpoint materializes
+        // the state (and truncates lineage — the reference's double-buffered
+        // value files, GraphDataServerDisk.java:1222-1258) and the observed
+        // report rides the same job. The stamped checkpoint pins hash(vid, p)
+        // (the one-arg localCheckpoint; the two-arg form yields
+        // UnknownPartitioning and re-exchanges the state in every join).
+        val obs = Observation()
+        val next = localCheckpointHashed(
+          stepped.observe(obs, reportCols.head, reportCols.tail: _*), Seq("vid"), p)
         // obs.get blocks until the listener delivers this execution's
         // metrics — the action above has already run, so this is a
         // listener-bus round-trip, not a job.
-        val rep: Map[String, Any] = obs.get
-        val respondCount = longOf(rep, "_respond")
-        val estMsgs = longOf(rep, "_estMsgs")
-        val newJobAgg = rep.get("_vagg") match {
-          case Some(v: Double) => v
-          case Some(null) | None => 0.0
-          case Some(v) => throw new IllegalStateException(
-            s"superstep report _vagg: expected Double, got ${v.getClass.getName} ($v)")
-        }
-        val touchedRows = longOf(rep, "_rows")
-        val activeCount = longOf(rep, "_active")
-        val respondBlocks = respondBlocksOf(rep)
+        val rep = BarrierReport.decode(obs.get)
 
-        val halt = respondCount == 0L || program.halted(newJobAgg, tEnd) || tEnd == program.maxSupersteps
+        val halt = rep.respondCount == 0L || program.halted(rep.jobAgg, tEnd) || tEnd == program.maxSupersteps
         // L5 fragment volume for the shuffle-gather pull estimate: exact edge
         // count over responding source blocks, from the driver-held stats.
-        val fragEdges = respondBlocks.iterator.map(b => blkEdges.getOrElse(b, 0L)).sum
-        style = cost.choose(tEnd, respondCount, estMsgs, StateRowBytes,
-          combineRatio = math.min(1.0, (maxVid + 1).toDouble / math.max(1L, estMsgs)),
-          respondBlockEdges = fragEdges)
+        val nextStyle = cost.choose(tEnd, rep.respondCount, rep.estMsgs, StateRowBytes,
+          combineRatio = math.min(1.0, (maxVid + 1).toDouble / math.max(1L, rep.estMsgs)),
+          respondBlockEdges = rep.respondBlocks.iterator.map(b => blkEdges.getOrElse(b, 0L)).sum)
 
         val wallMs = (System.nanoTime() - t0) / 1000000
         ckptPolicy.recordStep(wallMs)
         val doCkpt = ckpt.isDefined &&
           ((willCkptBoundary && (!cfg.dynamicCheckpoint || ckptPolicy.required)) || halt)
-        val m = SuperstepMetrics(tEnd, style.tag, respondCount, estMsgs, newJobAgg,
-          cost.lastQ, respondBlocks.length, NumBlocks, wallMs / (tEnd - t + 1), doCkpt, deltaStep)
+        val m = SuperstepMetrics(tEnd, nextStyle.tag, rep.respondCount, rep.estMsgs, rep.jobAgg,
+          cost.lastQ, rep.respondBlocks.length, NumBlocks, wallMs / (tEnd - t + 1), doCkpt, deltaStep)
         for (tt <- t to tEnd) metrics += m.copy(superstep = tt)
 
-        var senders: DataFrame = null
-        if (deltaStep) {
-          overlays :+= ((newDelta, touchedRows))
-          deltaRowsAcc += touchedRows
-          senders = newDelta.filter(col("respond"))
-          if (doCkpt) { // halt-time snapshot: persist the merged view
-            val c0 = System.nanoTime()
-            // materialized and stamped first: the overlay joins keep base's
-            // hash(vid, p) layout, and the saved state stays the new base
-            val merged = localCheckpointHashed(view(), Seq("vid"), p)
-            ckpt.get.save(merged, tEnd, newJobAgg, priorMetrics ++ metrics)
-            ckptPolicy.recordCheckpoint((System.nanoTime() - c0) / 1000000)
-            retireState()
-            base = merged
-          }
-        } else {
-          if (doCkpt) {
-            val c0 = System.nanoTime()
-            ckpt.get.save(newState, tEnd, newJobAgg, priorMetrics ++ metrics)
-            ckptPolicy.recordCheckpoint((System.nanoTime() - c0) / 1000000)
-          }
-          senders = newState.filter(col("respond"))
-          retireState() // full step compacts: old base + overlays retire
-          base = newState
+        if (deltaStep) store.push(next, rep.rows)
+        if (doCkpt) {
+          val c0 = System.nanoTime()
+          // a delta step snapshots only at halt: the merged view, which
+          // becomes the new base
+          ckpt.get.save(if (deltaStep) store.compact(p) else next, tEnd, rep.jobAgg, priorMetrics ++ metrics)
+          ckptPolicy.recordCheckpoint((System.nanoTime() - c0) / 1000000)
         }
-
-        if (!halt) {
-          val msgs = exchange(program, senders, adj, style, respondBlocks.toSeq, blkLen)
-          inbox = Some(program.aggregate(msgs))
-        } else done = true
-
-        jobAgg = newJobAgg
-        lastEstMsgs = estMsgs
-        lastActive = activeCount
-        t = tEnd + 1
+        if (!deltaStep) store.replace(next)
+        if (!halt) superstep(tEnd + 1, Some(send(next, nextStyle, rep.respondBlocks)), nextStyle, rep.jobAgg, Some(rep))
       }
-      (view(), metrics.toSeq)
+
+      // a resumed run regenerates the inbox its snapshot step had already sent
+      val resumedInbox = resumed.map { _ =>
+        send(store.view, cost.choose(startStep, store.view.filter(col("respond")).count(), 0, StateRowBytes, 1.0), Nil)
+      }
+      superstep(startStep, resumedInbox, Pull, resumed.map(_._3).getOrElse(0.0), None)
+      (store.view, metrics.toSeq)
     } catch {
       case e: Throwable =>
         // a crashed run also drops the state it was building (the caller
         // never sees it)
-        retireState()
+        store.retire()
         throw e
     } finally {
       priorConf.foreach {
@@ -632,7 +487,7 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
         // (dependency-matrix prune), explode to flat in-edges, and join
         // the respond relation — the senders shuffle once on src, the
         // fragment scan stays local, and no broadcast cap applies.
-        val ia = prune(adj.inAdjF(), col("_sblk"))
+        val ia = prune(adj.inAdj, col("_sblk"))
         val fcols = Seq(col("dst"), col("_ie.src").as("src")) ++
           (if (adj.hasWeight) Seq(col("_ie.weight").as("weight")) else Nil)
         val flat = ia.select(col("dst"), explode(col("_iadj")).as("_ie")).select(fcols: _*)
@@ -735,10 +590,121 @@ private[graft] object Pregel {
 /** Packed CSR adjacency: `cold` = (src, _adj) hash-partitioned on src;
  * `hot` = the hub sources' edges as (src, _salt, _adj) chunks spread over
  * all partitions by hash(dst) salt (present only when hubs exist);
- * `hasWeight` = the `_adj` structs carry an edge weight; `inAdjF` =
- * memoized provider of the dst-keyed in-edge fragment relation for
- * shuffle-gather PULL (built on first use). */
-private[pregel] final case class PackedAdj(
-    cold: DataFrame, hot: Option[DataFrame], hotVids: Array[Long], hasWeight: Boolean,
-    inAdjF: () => DataFrame =
-      () => throw new IllegalStateException("in-adjacency fragments not built"))
+ * `hasWeight` = the `_adj` structs carry an edge weight; `inAdj` = the
+ * dst-keyed in-edge fragment relation for shuffle-gather PULL, built from
+ * `fragments` on first use. */
+private[pregel] final class PackedAdj(
+    val cold: DataFrame, val hot: Option[DataFrame], val hotVids: Array[Long], val hasWeight: Boolean,
+    fragments: => DataFrame) {
+  lazy val inAdj: DataFrame = fragments
+}
+
+/** The vertex state (round 3, reference C2 VBlock-skip analog): `base` is
+ * the last fully-materialized state; `overlays` is a short list of small
+ * materialized deltas (full state schema, one per delta superstep, newest
+ * last). The logical state is base overridden by overlays newest-first;
+ * respond comes from the NEWEST overlay alone (a vertex responds only in
+ * the superstep that updated it). */
+private[pregel] final class StateStore {
+  private var base: DataFrame = null
+  private var overlays = Vector.empty[(DataFrame, Long)] // (delta, rows)
+
+  def view: DataFrame =
+    if (overlays.isEmpty) base
+    else {
+      val cols = base.columns.toSeq
+      val last = overlays.length - 1
+      val merged = overlays.zipWithIndex.foldLeft(base) { case (df, ((ov, rows), i)) =>
+        val renamed = ov.select(col("vid") +: cols.filterNot(_ == "vid").map(c => col(c).as(s"_o${i}_$c")): _*)
+        // overlays are hash(vid)-partitioned like base, so these joins
+        // are exchange-free; tiny overlays broadcast instead (skips the
+        // per-partition hash-table build on default-config sessions)
+        df.join(if (rows <= 100000L) broadcast(renamed) else renamed, Seq("vid"), "left_outer")
+      }
+      merged.select(cols.map {
+        case "vid" => col("vid")
+        case "respond" => coalesce(col(s"_o${last}_respond"), lit(false)).as("respond")
+        case c => coalesce((last to 0 by -1).map(i => col(s"_o${i}_$c")) :+ col(c): _*).as(c)
+      }: _*)
+    }
+
+  /** Overlay budget: another delta step may add an overlay while fewer
+   * than `maxOverlays` exist and they hold at most a quarter of |V| rows. */
+  def hasRoom(maxOverlays: Int, nApprox: Double): Boolean =
+    overlays.length < maxOverlays && overlays.iterator.map(_._2).sum <= 0.25 * nApprox
+
+  def push(delta: DataFrame, rows: Long): Unit = overlays :+= ((delta, rows))
+
+  /** `full` becomes the base; the old base and every overlay retire. */
+  def replace(full: DataFrame): Unit = {
+    retire()
+    base = full
+  }
+
+  /** Materialize the merged view as the new base, stamped hash(vid, p)
+   * (the overlay joins keep base's layout), and return it. */
+  def compact(p: Int): DataFrame = {
+    val merged = localCheckpointHashed(view, Seq("vid"), p)
+    replace(merged)
+    merged
+  }
+
+  /** Blocking: bounds block-manager storage — async unpersist let retired
+   * states pile up over long runs. */
+  def retire(): Unit = {
+    if (base != null) base.unpersist(blocking = true)
+    overlays.foreach(_._1.unpersist(blocking = true))
+    overlays = Vector.empty
+  }
+}
+
+/** One barrier's superstep report (VerBlockBeta analog): respond count,
+ * est. messages (sum of respond out-degrees), task aggregate, row count,
+ * active count, and the responding source blocks. */
+private[pregel] final case class BarrierReport(respondCount: Long, estMsgs: Long, jobAgg: Double,
+                                               rows: Long, active: Long, respondBlocks: Seq[Long])
+
+private[pregel] object BarrierReport {
+  private val Words = (Pregel.NumBlocks + 63) / 64
+
+  /** The report as OBSERVED metrics on the barrier's materialization
+   * (df.observe), so one superstep costs exactly ONE job — round 3 ran a
+   * second groupBy(blk)+collect job per barrier, ~half the fixed cost of
+   * the 150-row 25-superstep adjtext fixtures (VERDICT r3 #5). The
+   * responding-block set is a bit_or bitmap (NumBlocks bits in
+   * ceil(NumBlocks/64) longs): bitwise aggregation is deterministic, which
+   * CollectMetrics requires, where collect_set is not. Numeric columns are
+   * cast EXPLICITLY (long/double): the Observation map hands back whatever
+   * type the aggregate produced, and a program whose vertexAggCol/activeCol
+   * is Int/Decimal would otherwise be silently read as 0 (ADVICE r4). */
+  def columns(program: VertexProgram, blkLen: Long): Seq[Column] =
+    Seq(
+      sum(when(col("respond"), 1L).otherwise(0L)).cast("long").as("_respond"),
+      sum(when(col("respond"), col("outdeg")).otherwise(0L)).cast("long").as("_estMsgs"),
+      sum(program.vertexAggCol).cast("double").as("_vagg"),
+      count(lit(1)).cast("long").as("_rows"),
+      sum(program.activeCol).cast("long").as("_active")) ++
+      // integer div: exact beyond 2^53 vids
+      (0 until Words).map(w => expr(
+        s"bit_or(if(respond and (vid div $blkLen) div 64 = $w, " +
+          s"shiftleft(1L, cast((vid div $blkLen) % 64 as int)), 0L))").as(s"_rb$w"))
+
+  def decode(m: Map[String, Any]): BarrierReport = {
+    // null = empty input (sum over zero rows); any OTHER unexpected type
+    // is a bug in columns' casts and must throw, not read as 0 and
+    // silently corrupt halting/convergence
+    def get[T](k: String, zero: T, boxed: Class[_]): T = m.get(k) match {
+      case Some(null) | None => zero
+      case Some(v) if boxed.isInstance(v) => v.asInstanceOf[T]
+      case Some(v) => throw new IllegalStateException(
+        s"superstep report $k: expected ${boxed.getSimpleName}, got ${v.getClass.getName} ($v)")
+    }
+    def long(k: String): Long = get(k, 0L, classOf[java.lang.Long])
+    val blocks = (0 until Words).flatMap { w =>
+      val bits = long(s"_rb$w")
+      (0 until 64).collect { case b if (bits >> b & 1L) == 1L => w * 64L + b }
+    }
+    BarrierReport(long("_respond"), long("_estMsgs"), get("_vagg", 0.0, classOf[java.lang.Double]),
+      long("_rows"), long("_active"), blocks)
+  }
+}

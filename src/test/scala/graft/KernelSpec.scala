@@ -1,11 +1,9 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.{AnalysisException, Observation}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.CacheEntries
-import org.apache.spark.sql.util.QueryExecutionListener
 import graft.pregel._
 import graft.algos._
 
@@ -110,6 +108,45 @@ class KernelSpec extends SparkTestBase {
     assert(labels(cfg.copy(resume = true)) == full, "resumed run must equal the uninterrupted run")
   }
 
+  test("failAtSuperstep fires inside a fused group; the resume equals the uninterrupted run") {
+    val dir = Files.createTempDirectory("graft-fused-fail").toString
+    val (vids, directed) = RefOracle.randomGraph(30, 60, 21L)
+    val srcs = directed.map(_._1).toSet
+    val prEdges = edgeDF(directed ++ vids.filterNot(srcs).map(v => (v, v)))
+    val verts = vertDF(vids.size.toLong)
+    def scores(cfg: PregelConfig): (Map[Long, Double], Seq[SuperstepMetrics]) = {
+      val (state, metrics) = new Pregel(spark, cfg).run(new PageRank(vids.size.toLong, 12), verts, prEdges)
+      (state.select("vid", "value").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap, metrics)
+    }
+    // fuse 4: the barriers close supersteps 4, 8 and 12, so superstep 7 is
+    // inside the second group; the snapshot interval 3 saves superstep 4
+    val cfg = PregelConfig(numPartitions = 4, fusedSupersteps = 4, fuseMinEdges = 0L,
+      checkpointDir = Some(dir), checkpointEvery = 3, dynamicCheckpoint = false)
+    val (full, _) = scores(cfg.copy(checkpointDir = None))
+    val ex = intercept[RuntimeException](scores(cfg.copy(failAtSuperstep = Some(7))))
+    assert(ex.getMessage.contains("superstep 7"), ex.getMessage)
+    val (resumed, m) = scores(cfg.copy(resume = true))
+    assert(m.head.superstep == 5, s"must resume after the superstep-4 snapshot, got ${m.head.superstep}")
+    for (v <- vids) assert(math.abs(full(v) - resumed(v)) < 1e-9, s"v=$v ${full(v)} vs ${resumed(v)}")
+  }
+
+  test("a checkpointed run that halts on a delta step saves the merged view") {
+    val dir = Files.createTempDirectory("graft-halt").toString
+    // path graph of 25: CC halts at superstep 26, a delta step that is
+    // neither a snapshot-interval boundary nor an overlay compaction
+    val sym = (0L until 24L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
+    val cfg = PregelConfig(numPartitions = 4, checkpointDir = Some(dir), checkpointEvery = 100)
+    val (state, metrics) = new Pregel(spark, cfg).run(new ConnectedComponents(60), vertDF(25), edgeDF(sym))
+    val last = metrics.last
+    assert(last.delta && last.checkpointed,
+      s"superstep ${last.superstep}: delta=${last.delta} checkpointed=${last.checkpointed}")
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.select("vid", "label").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val saved = new Checkpoint(spark, dir, "cc").latest()
+    assert(saved.map(_._1).contains(last.superstep), s"latest snapshot ${saved.map(_._1)}")
+    assert(labels(saved.get._2) == labels(state), "the saved snapshot must equal the returned state")
+  }
+
   test("a failed resume load restores the session's AQE and shuffle-width conf") {
     // a complete-looking snapshot (_SUCCESS + meta.json) whose state is not parquet
     val dir = Files.createTempDirectory("graft-corrupt").toString
@@ -146,43 +183,35 @@ class KernelSpec extends SparkTestBase {
   test("every superstep from 2 on runs exactly one shuffle Exchange: the message combine") {
     // the barrier's eager localCheckpoint is an action, so the listener sees
     // its executed plan; the observe() carrying the superstep report marks it
-    val plans = scala.collection.mutable.ArrayBuffer[String]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-        val plan = qe.executedPlan.toString
-        if (plan.contains("CollectMetrics") && plan.contains("_respond")) plans.synchronized(plans += plan)
-      }
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    def barrierPlans(run: => Seq[SuperstepMetrics]): (Seq[String], Seq[SuperstepMetrics]) = {
-      plans.synchronized(plans.clear())
-      spark.listenerManager.register(listener)
-      try {
-        val metrics = run
-        // listener events arrive in order: once this later observation is
-        // delivered, every barrier before it has been recorded
-        val flush = Observation()
-        spark.range(1).observe(flush, count(lit(1))).collect()
-        flush.get
-        (plans.synchronized(plans.toList), metrics)
-      } finally spark.listenerManager.unregister(listener)
-    }
+    def barrierPlans(run: => Seq[SuperstepMetrics]): (Seq[SuperstepMetrics], Seq[String]) =
+      executedPlans(plan => plan.contains("CollectMetrics") && plan.contains("_respond"))(run)
     def shuffles(plan: String): Int = "(?<!Broadcast)Exchange".r.findAllIn(plan).length
     val (vids, directed) = RefOracle.randomGraph(60, 150, 5L)
     val sym = (directed ++ directed.map(_.swap)).distinct
     val srcs = directed.map(_._1).toSet
     val prEdges = edgeDF(directed ++ vids.filterNot(srcs).map(v => (v, v)))
+    val weighted = edgeDF(sym).select(col("src"), col("dst"), SSSP.weightCol)
     val verts = vertDF(vids.size.toLong)
     for (mode <- Seq(ForcePush, Hybrid)) {
       val pregel = new Pregel(spark, PregelConfig(numPartitions = 4, mode = mode))
-      for ((name, run) <- Seq[(String, () => Seq[SuperstepMetrics])](
-          "pagerank" -> (() => pregel.run(new PageRank(vids.size.toLong, 6), verts, prEdges)._2),
-          "cc" -> (() => pregel.run(new ConnectedComponents(20), verts, edgeDF(sym))._2))) {
-        val (barriers, metrics) = barrierPlans(run())
+      for ((name, exchanges, run) <- Seq[(String, Int, () => Seq[SuperstepMetrics])](
+          ("pagerank", 1, () => pregel.run(new PageRank(vids.size.toLong, 6), verts, prEdges)._2),
+          ("cc", 1, () => pregel.run(new ConnectedComponents(20), verts, edgeDF(sym))._2),
+          // delta steps (overlay view, inbox broadcast) and, in Hybrid, the
+          // broadcast pull
+          ("sssp", 1, () => pregel.run(new SSSP(0L, 30), verts, weighted)._2),
+          // LPA's aggregate runs two: the (vid, label) count aggregate
+          // shuffles on (vid, msg), then the per-vid arg-max on vid
+          ("lpa", 2, () => pregel.run(new LabelPropagation(8), verts, edgeDF(sym))._2))) {
+        val (metrics, barriers) = barrierPlans(run())
         assert(barriers.length == metrics.length, s"$name $mode: one barrier per superstep")
         barriers.zip(metrics).drop(1).foreach { case (plan, m) =>
-          assert(shuffles(plan) == 1,
+          assert(shuffles(plan) == exchanges,
             s"$name $mode superstep ${m.superstep} (${m.style}): ${shuffles(plan)} shuffle exchanges\n$plan")
+        }
+        if (name == "sssp") {
+          assert(metrics.exists(_.delta), s"sssp $mode: expected delta supersteps")
+          if (mode == Hybrid) assert(metrics.exists(_.style == "pull"), "sssp Hybrid: expected pull exchanges")
         }
       }
     }

@@ -32,4 +32,31 @@ abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     (0L until n).toDF("vid")
   }
+
+  /** Run `body` and return its result with the executed plan of every
+   * query it ran that `keep` accepts, in execution order. */
+  def executedPlans[T](keep: String => Boolean)(body: => T): (T, Seq[String]) = {
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.functions.{count, lit}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = scala.collection.mutable.ArrayBuffer[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val plan = qe.executedPlan.toString
+        if (keep(plan)) plans.synchronized(plans += plan)
+      }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val result = body
+      // listener events arrive in order: once this later observation is
+      // delivered, every query before it has been recorded
+      val flush = Observation()
+      spark.range(1).observe(flush, count(lit(1))).collect()
+      flush.get
+      (result, plans.synchronized(plans.toList))
+    } finally spark.listenerManager.unregister(listener)
+  }
 }

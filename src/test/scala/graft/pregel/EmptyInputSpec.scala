@@ -38,4 +38,12 @@ class EmptyInputSpec extends graft.SparkTestBase {
     assert(AdjacencyText.edges(spark, f.toString).count() == 0L)
     assert(AdjacencyText.weightedEdges(spark, f.toString).count() == 0L)
   }
+
+  test("barrier report decode: null reads as 0, any type other than the cast one throws") {
+    val r = BarrierReport.decode(Map("_respond" -> 5L, "_vagg" -> null, "_rb0" -> 3L, "_rb3" -> Long.MinValue))
+    assert(r == BarrierReport(5L, 0L, 0.0, 0L, 0L, Seq(0L, 1L, 255L)))
+    assert(BarrierReport.decode(Map("_vagg" -> 2.5)).jobAgg == 2.5)
+    for (bad <- Seq[(String, Any)]("_vagg" -> 1, "_respond" -> 2.0, "_rb1" -> BigDecimal(1)))
+      intercept[IllegalStateException](BarrierReport.decode(Map(bad)))
+  }
 }

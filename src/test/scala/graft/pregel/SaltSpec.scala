@@ -11,8 +11,10 @@ import graft.algos.ConnectedComponents
  * (driver-measured slower than unsalted, BENCH_r02 skew). */
 class SaltSpec extends graft.SparkTestBase {
 
-  // star hub 0 <-> 1..200 plus a chain 201..220: with p=8 the hub's
-  // degree (200) clears the 2|E|/p cut (~110), so Pregel salts exactly {0}
+  // star hub 0 <-> 1..200 plus a chain 201..220 (438 edges): at p = 8 the
+  // hub's degree (200) clears the 2|E|/p cut (109), so Pregel salts
+  // exactly {0}. The kernel runs at p = 8 only with the edges-per-partition
+  // adaptivity off: the default 32,768 would give p = 1 and a cut of 876.
   private def starEdges: Seq[(Long, Long)] = {
     val star = (1L to 200L).flatMap(i => Seq((0L, i), (i, 0L)))
     val chain = (201L until 220L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
@@ -21,14 +23,22 @@ class SaltSpec extends graft.SparkTestBase {
 
   test("salted CC equals unsalted CC (push and pull)") {
     val verts = vertDF(221)
-    def cc(saltMinDeg: Long, mode: ExchangeMode) = ConnectedComponents.labels(
-      new Pregel(spark, PregelConfig(numPartitions = 8, mode = mode, saltMinDeg = saltMinDeg)),
-      verts, edgeDF(starEdges), 6)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val unsalted = cc(0L, Hybrid)
-    assert(cc(1L, Hybrid) == unsalted, "salted hybrid != unsalted")
-    assert(cc(1L, ForcePush) == unsalted, "salted push != unsalted")
-    assert(cc(1L, ForcePull) == unsalted, "salted pull != unsalted")
+    // (labels, whether any executed plan read the salted hot relation)
+    def cc(saltMinDeg: Long, mode: ExchangeMode): (Map[Long, Long], Boolean) = {
+      val cfg = PregelConfig(numPartitions = 8, targetEdgesPerPartition = 0, mode = mode, saltMinDeg = saltMinDeg)
+      val (labels, salted) = executedPlans(_.contains("_salt")) {
+        ConnectedComponents.labels(new Pregel(spark, cfg), verts, edgeDF(starEdges), 6)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      (labels, salted.nonEmpty)
+    }
+    val (unsalted, unsaltedSalts) = cc(0L, Hybrid)
+    assert(!unsaltedSalts, "saltMinDeg = 0 must not salt")
+    for (mode <- Seq(Hybrid, ForcePush, ForcePull)) {
+      val (labels, salts) = cc(1L, mode)
+      assert(salts, s"salted $mode: no executed plan reads the salted hot relation")
+      assert(labels == unsalted, s"salted $mode != unsalted")
+    }
   }
 
   test("hot relation builds from flat edges: parallel chunks, no packed-row explode") {
@@ -73,8 +83,8 @@ class SaltSpec extends graft.SparkTestBase {
     def plan(adj: PackedAdj): String =
       pregel.exchange(prog, state.filter(col("respond")), adj, Push, Nil, 100L)
         .queryExecution.executedPlan.toString
-    val unsaltedPlan = plan(PackedAdj(coldAll, None, Array.empty, hasWeight = false))
-    val saltedPlan = plan(PackedAdj(cold, Some(hot), Array(0L), hasWeight = false))
+    val unsaltedPlan = plan(new PackedAdj(coldAll, None, Array.empty, hasWeight = false, ???))
+    val saltedPlan = plan(new PackedAdj(cold, Some(hot), Array(0L), hasWeight = false, ???))
     def shuffles(s: String): Int = "(?<!Broadcast)Exchange".r.findAllIn(s).length
     assert(saltedPlan.contains("BroadcastHashJoin"),
       s"hot senders must broadcast-join the salted chunks:\n$saltedPlan")
