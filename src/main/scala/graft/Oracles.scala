@@ -84,7 +84,8 @@ object Oracles {
     withGraphChain(Seq(LinkGraph.undirectedSql), KCore.oracleSql(k, iters))
 
   def ppr(source: Long, iters: Int): String =
-    withGraphChain(Seq(LinkGraph.prEdgesSql), PersonalizedPageRank.oracleSql(source, iters))
+    withGraphChain(Seq(LinkGraph.prEdgesSql),
+      PageRank.oracleSql(iters, s"CASE WHEN vid = $source THEN 0.15 ELSE 0.0 END", "ppr_scaled"))
 
   def hits(iters: Int): String =
     withGraphChain(Nil, HITS.oracleSql(iters))

@@ -101,7 +101,7 @@ object SparkEntry {
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     val g = graphOf(spark, "/root/testdata/sf0.001")
-    PageRank.scores(pregel(spark), g.verts.select("vid"), g.prEdges, g.n, PR_ITERS)
+    PageRank.scores(pregel(spark), new PageRank(g.n, PR_ITERS), g.verts.select("vid"), g.prEdges, g.n)
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
@@ -122,7 +122,8 @@ object SparkEntry {
     }),
     "pagerank" -> ((s, dir) => {
       val g = graphOf(s, dir)
-      PageRank.scores(pregel(s), g.verts.select("vid"), g.prEdges, g.n, PR_ITERS).orderBy("vid")
+      PageRank.scores(pregel(s), new PageRank(g.n, PR_ITERS), g.verts.select("vid"), g.prEdges, g.n)
+        .orderBy("vid")
     }),
     "cc" -> ((s, dir) => {
       val g = graphOf(s, dir)
@@ -196,8 +197,8 @@ object SparkEntry {
     // the reference PageRank with a point teleport vector
     "ppr" -> ((s, dir) => {
       val g = graphOf(s, dir)
-      PersonalizedPageRank.scores(pregel(s), g.verts.select("vid"), g.prEdges,
-        SSSP_SOURCE, g.n, PR_ITERS).orderBy("vid")
+      PageRank.scores(pregel(s), PageRank.personalized(SSSP_SOURCE, PR_ITERS),
+        g.verts.select("vid"), g.prEdges, g.n, "ppr_scaled").orderBy("vid")
     }),
     // HITS hubs & authorities — the other canonical link-analysis ranking;
     // both directions ride one direction-tagged edge relation

@@ -38,10 +38,7 @@ final class LabelPropagation(maxIters: Int) extends VertexProgram {
   val msgExpr: Column = col("label")
 
   def aggregate(msgs: DataFrame): DataFrame =
-    msgs.groupBy(col("vid"), col("msg")).agg(count(lit(1)).as("cnt"))
-      .groupBy("vid")
-      .agg(max(struct(col("cnt"), col("msg"))).as("m"))
-      .select(col("vid"), col("m.msg").as("magg"))
+    LabelPropagation.vote(msgs).select(col("vid"), col("m.msg").as("magg"))
 
   def emptyInboxCols: Seq[(String, Column)] =
     Seq("magg" -> lit(null).cast("long"))
@@ -70,6 +67,14 @@ final class LabelPropagation(maxIters: Int) extends VertexProgram {
 }
 
 object LabelPropagation {
+  /** The popularity vote of LPA and SA: (vid, m = struct(cnt, msg)) with
+   * msg the most frequent incoming message and cnt its count. The
+   * lexicographic struct max gives max-count with max-msg tie-break and is
+   * valid for the full 64-bit vid range. */
+  private[algos] def vote(msgs: DataFrame): DataFrame =
+    msgs.groupBy(col("vid"), col("msg")).agg(count(lit(1)).as("cnt"))
+      .groupBy("vid").agg(max(struct(col("cnt"), col("msg"))).as("m"))
+
   def labels(pregel: Pregel, vertices: DataFrame, undirected: DataFrame, iters: Int): DataFrame = {
     val (state, _) = pregel.run(new LabelPropagation(iters), vertices, undirected)
     state.select(col("vid"), col("label"))

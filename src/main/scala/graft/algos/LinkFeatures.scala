@@ -1,6 +1,6 @@
 package graft.algos
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -12,17 +12,16 @@ import org.apache.spark.sql.functions._
  * ExampleDriver.java:26-62); this is a training-data-pipeline addition
  * on the same derived link graph.
  *
- * Scale design: enumerating common neighbors of edge (u,w) from either
- * endpoint naively costs Σ_edges deg(endpoint) — hub-quadratic on our
- * tool hubs. Each edge is ORIENTED by (degree, vid) rank (the
- * per-edge degrees are needed for Jaccard anyway, so unlike
- * [[TriangleCount]]'s hub split the degree joins cost nothing extra)
- * and candidates are enumerated ONLY from the
- * lower-rank endpoint's adjacency, bounding the wedge volume by
- * Σ_edges min(deg_u, deg_w) = O(m^1.5) with no hot key; the closure
- * check and the degree lookup are plain equi-joins (sort-merge /
- * shuffle-hash under AQE, never a cross product). A common neighbor has
- * degree ≥ 2 by construction, so 1/ln(deg) is always finite.
+ * Scale design: the common neighbours of edge (u,w) are exactly the third
+ * vertices of the triangles on it, so the features read
+ * [[TriangleCount.closures]] — its hub-split oriented, packed sorted-set
+ * intersection (O(m^1.5) wedge volume, no hub-quadratic key) — instead of
+ * enumerating wedges a second time. A closure row (v, w, common) credits
+ * each c in common to the edges (v,w), (v,c) and (w,c), each time with the
+ * triangle's remaining vertex as the third; grouping by the canonical pair
+ * gives the common-neighbour count and Σ 1/ln(deg(third)). The only joins
+ * against `undirected` are for degrees. A common neighbour has degree ≥ 2
+ * by construction, so 1/ln(deg) is always finite.
  */
 object LinkFeatures {
 
@@ -30,23 +29,17 @@ object LinkFeatures {
    * @param undirected symmetrized distinct edge set (both directions) */
   def edgeFeatures(canonical: DataFrame, undirected: DataFrame): DataFrame = {
     val deg = undirected.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
-
     val e = canonical
       .join(deg.select(col("v").as("src"), col("deg").as("dsrc")), "src")
       .join(deg.select(col("v").as("dst"), col("deg").as("ddst")), "dst")
-    val srcLower = col("dsrc") < col("ddst") ||
-      (col("dsrc") === col("ddst") && col("src") < col("dst"))
-    val oriented = e.select(col("src"), col("dst"), col("dsrc"), col("ddst"),
-      when(srcLower, col("src")).otherwise(col("dst")).as("lo"),
-      when(srcLower, col("dst")).otherwise(col("src")).as("hi"))
 
-    // candidate common neighbors from the LOW-rank endpoint's adjacency;
-    // closure = (hi, v) is also an edge. v == lo/hi is impossible (the
-    // edge sets carry no self-loops).
-    val cands = oriented
-      .join(undirected.select(col("src").as("lo"), col("dst").as("v")), "lo")
-      .join(undirected.select(col("src").as("hi"), col("dst").as("v")), Seq("hi", "v"))
-    val scored = cands
+    // the edge (a,b) of triangle {a, b, third}, as a canonical pair
+    def credit(a: Column, b: Column, third: Column): Column =
+      struct(least(a, b).as("src"), greatest(a, b).as("dst"), third.as("v"))
+    val scored = TriangleCount.closures(canonical)
+      .select(col("v"), col("w"), explode(col("common")).as("c"))
+      .select(inline(array(credit(col("v"), col("w"), col("c")),
+        credit(col("v"), col("c"), col("w")), credit(col("w"), col("c"), col("v")))))
       .join(deg.select(col("v"), col("deg").as("degv")), "v")
       .groupBy("src", "dst")
       .agg(count(lit(1)).as("cn"), sum(lit(1.0) / log(col("degv"))).as("aa"))
@@ -60,7 +53,7 @@ object LinkFeatures {
   }
 
   /** DuckDB oracle body; requires `uedges`,`cedges` CTEs (the naive
-   * two-join enumeration — same result set as the oriented plan). */
+   * two-join enumeration — same result set as the closure plan). */
   val oracleBodySql: String =
     """vdeg AS (SELECT src AS v, CAST(count(*) AS BIGINT) AS deg FROM uedges GROUP BY src),
       |feats AS (

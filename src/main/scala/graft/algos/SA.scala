@@ -28,13 +28,9 @@ final class SA(source: Long, maxIters: Int) extends VertexProgram {
 
   val msgExpr: Column = col("aid")
 
-  // max(struct(count, id)): lexicographic struct max = popularity argmax
-  // with max-id tie-break (SABSP.findNewValue:147-155), valid for the full
-  // 64-bit vid range (round 2's count*10^8+id packing capped vids at 10^8)
+  // popularity argmax with max-id tie-break (SABSP.findNewValue:147-155)
   def aggregate(msgs: DataFrame): DataFrame =
-    msgs.groupBy(col("vid"), col("msg")).agg(count(lit(1)).as("c"))
-      .groupBy("vid").agg(max(struct(col("c"), col("msg"))).as("m"))
-      .select(col("vid"), col("m.c").as("mcnt"), col("m.msg").as("maid"))
+    LabelPropagation.vote(msgs).select(col("vid"), col("m.cnt").as("mcnt"), col("m.msg").as("maid"))
 
   def emptyInboxCols: Seq[(String, Column)] =
     Seq("mcnt" -> lit(null).cast("long"), "maid" -> lit(null).cast("long"))

@@ -57,7 +57,7 @@ object TriangleCount {
   /** One row per oriented edge v→w with a non-empty suffix: (v, w, common)
    * where common = suffix(out(v), w) ∩ out(w), the third vertex of every
    * triangle found at v→w. */
-  private def closures(canonical: DataFrame): DataFrame = {
+  private[algos] def closures(canonical: DataFrame): DataFrame = {
     val out = oriented(canonical)
     val wedges = out
       .select(col("v"), col("out"), posexplode(col("out")).as(Seq("i", "w")))

@@ -426,11 +426,20 @@ final class Pregel(spark: SparkSession, cfg: PregelConfig = PregelConfig()) {
         if (!halt) superstep(tEnd + 1, Some(send(next, nextStyle, rep.respondBlocks)), nextStyle, rep.jobAgg, Some(rep))
       }
 
-      // a resumed run regenerates the inbox its snapshot step had already sent
-      val resumedInbox = resumed.map { _ =>
-        send(store.view, cost.choose(startStep, store.view.filter(col("respond")).count(), 0, StateRowBytes, 1.0), Nil)
+      // The first group's in-group sends run before any barrier has
+      // reported. A resumed run sends them in the style it chose for the
+      // inbox its snapshot step had already sent (and regenerates here); a
+      // fresh run asks a throwaway model — `cost` keeps its state — for an
+      // all-responding step, so forced modes and the broadcast cap hold.
+      val (resumedInbox, openStyle) = resumed match {
+        case Some(_) =>
+          val style = cost.choose(startStep, store.view.filter(col("respond")).count(), 0, StateRowBytes, 1.0)
+          (Some(send(store.view, style, Nil)), style)
+        case None =>
+          (None, new CostModel(cfg.mode, cfg.broadcastCapBytes).choose(startStep, maxVid + 1, edgeCount,
+            StateRowBytes, math.min(1.0, (maxVid + 1).toDouble / math.max(1L, edgeCount)), edgeCount))
       }
-      superstep(startStep, resumedInbox, Pull, resumed.map(_._3).getOrElse(0.0), None)
+      superstep(startStep, resumedInbox, openStyle, resumed.map(_._3).getOrElse(0.0), None)
       (store.view, metrics.toSeq)
     } catch {
       case e: Throwable =>

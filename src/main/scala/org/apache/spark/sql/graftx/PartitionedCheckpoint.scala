@@ -1,8 +1,7 @@
 package org.apache.spark.sql.graftx
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Attribute, ExpressionSet}
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -36,12 +35,6 @@ import org.apache.spark.sql.execution.LogicalRDD
  */
 object PartitionedCheckpoint {
 
-  private def priv[T](o: AnyRef, name: String): T = {
-    val f = o.getClass.getDeclaredField(name)
-    f.setAccessible(true)
-    f.get(o).asInstanceOf[T]
-  }
-
   /** `df.localCheckpoint(eager)` with `hash(keys, p)` stamped on the
    * resulting LogicalRDD. Falls back to the plain checkpoint when the
    * plan shape is unexpected or a key column is missing. Throws
@@ -63,14 +56,11 @@ object PartitionedCheckpoint {
           throw new IllegalStateException(
             s"cannot stamp hash(${keys.mkString(", ")}, $p) on a relation with $n partitions")
         } else {
-          // copy()'s curried (session, originStats, originConstraints)
-          // list has no defaults; carry the originals through so the
-          // stamped relation keeps its statistics (join sizing).
-          val stamped = lr.copy(outputPartitioning =
-            HashPartitioning(attrs.map(_.get), p))(
-            priv[SparkSession](lr, "session"),
-            priv[Option[Statistics]](lr, "originStats"),
-            priv[Option[ExpressionSet]](lr, "originConstraints"))
+          // makeCopy appends the curried (session, originStats,
+          // originConstraints) list itself, so the stamped relation keeps
+          // its statistics (join sizing).
+          val stamped = lr.makeCopy(Array(lr.output, lr.rdd, HashPartitioning(attrs.map(_.get), p),
+            lr.outputOrdering, Boolean.box(lr.isStreaming), lr.stream))
           Dataset.ofRows(ck.sparkSession.asInstanceOf[SparkSession], stamped)
         }
       case _ => ck

@@ -26,7 +26,7 @@ class AlgoGoldenSpec extends SparkTestBase {
     assert(ccOf(3, Seq((0L,1L),(1L,0L),(0L,2L),(2L,0L),(1L,2L),(2L,1L))) == Map(0L -> 0L, 1L -> 0L, 2L -> 0L))
 
     val prEdges = LinkGraph.withSelfLoops(sym, vertDF(3))
-    val scores = PageRank.scores(pregel(), vertDF(3), prEdges, 3, 8)
+    val scores = PageRank.scores(pregel(), new PageRank(3, 8), vertDF(3), prEdges, 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(scores.values.toSet.size == 1, s"K3 PR must be symmetric: $scores")
   }
@@ -49,7 +49,7 @@ class AlgoGoldenSpec extends SparkTestBase {
     // 0 -> 1, vertex 1 dangling -> gets self-loop at derivation
     val directed = edgeDF(Seq((0L, 1L)))
     val prEdges = LinkGraph.withSelfLoops(directed, vertDF(2))
-    val got = PageRank.scores(pregel(), vertDF(2), prEdges, 2, 6)
+    val got = PageRank.scores(pregel(), new PageRank(2, 6), vertDF(2), prEdges, 2)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val want = RefOracle.pagerank(Seq(0L, 1L), Seq((0L, 1L), (1L, 1L)), 6)
     for ((v, x) <- want) assert(math.abs(got(v) - x * 2) < 1e-6, s"v=$v got=${got(v)} want=${x * 2}")
@@ -133,7 +133,7 @@ class AlgoGoldenSpec extends SparkTestBase {
   test("personalized PageRank: all mass reachable from the source only") {
     // two components: source's component holds all nonzero mass
     val e = Seq((0L,1L), (1L,0L), (2L,3L), (3L,2L))
-    val got = PersonalizedPageRank.scores(pregel(), vertDF(4), edgeDF(e), 0L, 4L, 8)
+    val got = PageRank.scores(pregel(), PageRank.personalized(0L, 8), vertDF(4), edgeDF(e), 4L, "ppr_scaled")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got(2L) == 0.0 && got(3L) == 0.0, s"unreachable mass must be 0: $got")
     assert(got(0L) > got(1L) && got(1L) > 0.0, s"source-adjacent ordering: $got")

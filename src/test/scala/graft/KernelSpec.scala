@@ -130,6 +130,50 @@ class KernelSpec extends SparkTestBase {
     for (v <- vids) assert(math.abs(full(v) - resumed(v)) < 1e-9, s"v=$v ${full(v)} vs ${resumed(v)}")
   }
 
+  test("a fused run's first barrier group sends in the mode's style, fresh and resumed") {
+    // the in-group sends of the first group run before any barrier has
+    // chosen a style; they must not broadcast under ForcePush nor past the
+    // broadcast cap
+    val dir = Files.createTempDirectory("graft-fused-style").toString
+    val (vids, directed) = RefOracle.randomGraph(30, 60, 21L)
+    val srcs = directed.map(_._1).toSet
+    val prEdges = edgeDF(directed ++ vids.filterNot(srcs).map(v => (v, v)))
+    val verts = vertDF(vids.size.toLong)
+    def run(cfg: PregelConfig) = new Pregel(spark, cfg).run(new PageRank(vids.size.toLong, 12), verts, prEdges)
+    def broadcastingBarriers(cfg: PregelConfig): Seq[Int] = {
+      val (metrics, plans) = executedPlans(plan => plan.contains("CollectMetrics") && plan.contains("_respond"))(run(cfg)._2)
+      assert(plans.nonEmpty && plans.length * 4 >= metrics.length, s"${plans.length} barriers, ${metrics.length} supersteps")
+      plans.zipWithIndex.collect { case (plan, i) if plan.contains("BroadcastExchange") => i }
+    }
+    val fused = PregelConfig(numPartitions = 4, fusedSupersteps = 4, fuseMinEdges = 0L)
+    val push = fused.copy(mode = ForcePush)
+    assert(broadcastingBarriers(push).isEmpty, "ForcePush: barriers with a BroadcastExchange")
+    val ckpt = push.copy(checkpointDir = Some(dir), checkpointEvery = 3, dynamicCheckpoint = false)
+    intercept[RuntimeException](run(ckpt.copy(failAtSuperstep = Some(7))))
+    assert(broadcastingBarriers(ckpt.copy(resume = true)).isEmpty,
+      "ForcePush resumed leg: barriers with a BroadcastExchange")
+    assert(broadcastingBarriers(fused.copy(mode = Hybrid, broadcastCapBytes = 1L)).isEmpty,
+      "Hybrid with a 1-byte broadcast cap: barriers with a BroadcastExchange")
+  }
+
+  test("PageRank and personalized PageRank keep separate checkpoints in one directory") {
+    val dir = Files.createTempDirectory("graft-pr-ppr").toString
+    val (vids, directed) = RefOracle.randomGraph(30, 60, 21L)
+    val srcs = directed.map(_._1).toSet
+    val prEdges = edgeDF(directed ++ vids.filterNot(srcs).map(v => (v, v)))
+    val verts = vertDF(vids.size.toLong)
+    val cfg = PregelConfig(numPartitions = 4, checkpointDir = Some(dir), checkpointEvery = 2)
+    new Pregel(spark, cfg).run(new PageRank(vids.size.toLong, 8), verts, prEdges)
+    assert(new Checkpoint(spark, dir, "pagerank").latest().isDefined, "PageRank saved no snapshot")
+    def ppr(cfg: PregelConfig): (Map[Long, Double], Seq[SuperstepMetrics]) = {
+      val (state, metrics) = new Pregel(spark, cfg).run(PageRank.personalized(vids.head, 8), verts, prEdges)
+      (state.select("vid", "value").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap, metrics)
+    }
+    val (resumed, metrics) = ppr(cfg.copy(resume = true))
+    assert(metrics.head.superstep == 1, s"PPR resumed PageRank's snapshot at superstep ${metrics.head.superstep}")
+    assert(resumed == ppr(PregelConfig(numPartitions = 4))._1, "PPR must equal an uncheckpointed PPR run")
+  }
+
   test("a checkpointed run that halts on a delta step saves the merged view") {
     val dir = Files.createTempDirectory("graft-halt").toString
     // path graph of 25: CC halts at superstep 26, a delta step that is
@@ -298,7 +342,7 @@ class KernelSpec extends SparkTestBase {
     def pr(fuse: Int) = PageRank.scores(
       new Pregel(spark, PregelConfig(numPartitions = 4, fusedSupersteps = fuse,
         fuseMinEdges = 0L)), // floor off: the test must exercise real fusing
-      verts, edgeDF(withLoops), vids.size.toLong, 9)
+      new PageRank(vids.size.toLong, 9), verts, edgeDF(withLoops), vids.size.toLong)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val a = pr(1); val b = pr(4)
     for (v <- vids) assert(math.abs(a(v) - b(v)) < 1e-9, s"v=$v ${a(v)} vs ${b(v)}")

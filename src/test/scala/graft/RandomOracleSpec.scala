@@ -25,7 +25,7 @@ class RandomOracleSpec extends SparkTestBase {
         val srcs = directed.map(_._1).toSet
         directed ++ vids.filterNot(srcs).map(v => (v, v))
       }
-      val pr = PageRank.scores(p, verts, edgeDF(withLoops), n, 8)
+      val pr = PageRank.scores(p, new PageRank(n, 8), verts, edgeDF(withLoops), n)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       val prWant = RefOracle.pagerank(vids, withLoops, 8)
       for (v <- vids)
@@ -66,7 +66,7 @@ class RandomOracleSpec extends SparkTestBase {
       }
 
       // personalized PageRank — allclose 1e-6 on the scaled score
-      val pprGot = PersonalizedPageRank.scores(p, verts, edgeDF(withLoops), vids.head, n, 8)
+      val pprGot = PageRank.scores(p, PageRank.personalized(vids.head, 8), verts, edgeDF(withLoops), n, "ppr_scaled")
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       val pprWant = RefOracle.ppr(vids, withLoops, vids.head, 8)
       for (v <- vids)

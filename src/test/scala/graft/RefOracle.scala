@@ -108,6 +108,18 @@ object RefOracle {
     vids.map(v => v -> counts(v)).toMap
   }
 
+  /** Brute-force link features per canonical (src<dst) edge: (common
+   * neighbours, Jaccard, Adamic–Adar), unrounded. */
+  def edgeFeatures(canonical: Seq[(Long, Long)]): Map[(Long, Long), (Long, Double, Double)] = {
+    val nbrs = (canonical ++ canonical.map(_.swap)).groupBy(_._1).map { case (v, es) => v -> es.map(_._2).toSet }
+    canonical.map { case (u, w) =>
+      val common = nbrs(u) intersect nbrs(w)
+      val cn = common.size.toLong
+      (u, w) -> ((cn, cn.toDouble / (nbrs(u).size + nbrs(w).size - cn),
+        common.toSeq.map(c => 1.0 / math.log(nbrs(c).size.toDouble)).sum))
+    }.toMap
+  }
+
   /** Fixed-K synchronous k-core peel (a1 = all alive; a_t = alive AND
    * count of alive in-neighbors >= k). Symmetrized distinct edges. */
   def kcore(vids: Seq[Long], edges: Seq[(Long, Long)], k: Int, iters: Int): Map[Long, Int] = {

@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => Check}
 import org.scalacheck.Prop.propBoolean
-import graft.algos.TriangleCount
+import graft.algos.{ClusteringCoefficient, LinkFeatures, TriangleCount}
 
-/** Triangle counts (global, per vertex, per vertex over all vertices)
- * against the brute-force RefOracle count, on random graphs and on the
+/** Triangle counts (global, per vertex, per vertex over all vertices), the
+ * edge features built on the same closures and the clustering coefficient
+ * against brute-force RefOracle results, on random graphs and on the
  * shapes the hub-split orientation has to get right: a hub above √(2m),
  * degree ties among cold and among hot vertices, Kₙ, a triangle-free
  * graph and the empty graph. */
@@ -16,17 +17,35 @@ class TriangleSpec extends SparkTestBase {
     edges.filter { case (a, b) => a != b }
       .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
 
-  /** None when all three agree with the brute-force count, else the mismatch. */
+  private def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** None when the triangle counts, the edge features and the clustering
+   * coefficient all agree with the brute-force oracle, else the mismatch.
+   * Common-neighbour counts compare exactly; Jaccard, Adamic–Adar and the
+   * coefficient after the engine's 6-dp rounding. */
   private def mismatch(n: Long, canon: Seq[(Long, Long)]): Option[String] = {
     val vids = (0L until n).toSeq
     val want = RefOracle.triangles(vids, canon)
     val e = edgeDF(canon)
+    val und = edgeDF(canon ++ canon.map(_.swap))
     val global = TriangleCount.global(e).head().getLong(0)
     val per = TriangleCount.perVertex(e).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val all = TriangleCount.perVertexAll(e, vertDF(n)).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val feats = LinkFeatures.edgeFeatures(e, und).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getDouble(3), r.getDouble(4)))).toMap
+    val wantFeats = RefOracle.edgeFeatures(canon).map { case (k, (cn, j, aa)) => k -> ((cn, round6(j), round6(aa))) }
+    val coeff = ClusteringCoefficient.local(e, und, vertDF(n)).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val deg = canon.flatMap { case (a, b) => Seq(a, b) }.groupBy(identity).map { case (v, vs) => v -> vs.size.toLong }
+    val wantCoeff = vids.map { v =>
+      val d = deg.getOrElse(v, 0L)
+      v -> (if (d >= 2) round6((2L * want(v)).toDouble / (d * (d - 1))) else 0.0)
+    }.toMap
     if (global != want.values.sum / 3) Some(s"global $global, want ${want.values.sum / 3}")
     else if (per != want.filter(_._2 > 0)) Some(s"perVertex $per, want ${want.filter(_._2 > 0)}")
     else if (all != want) Some(s"perVertexAll $all, want $want")
+    else if (feats != wantFeats) Some(s"edgeFeatures $feats, want $wantFeats")
+    else if (coeff != wantCoeff) Some(s"clustering coefficient $coeff, want $wantCoeff")
     else None
   }
 
@@ -89,6 +108,7 @@ class TriangleSpec extends SparkTestBase {
     val cycle = canonical((0L until 8L).map(i => (i, (i + 1) % 8)))
     assert(mismatch(8, cycle).isEmpty, mismatch(8, cycle))
     assert(TriangleCount.global(edgeDF(cycle)).head().getLong(0) == 0L)
+    assert(mismatch(3, Nil).isEmpty, mismatch(3, Nil))
     val empty = edgeDF(Seq.empty)
     val g = TriangleCount.global(empty).head()
     assert(!g.isNullAt(0) && g.getLong(0) == 0L)

@@ -54,6 +54,16 @@ class PartitionedCheckpointSpec extends AnyFunSuite {
     assert(j.count() == 500)
   }
 
+  test("the stamped relation keeps the plain checkpoint's size statistics") {
+    // join sizing reads them: without them a stamped relation would plan as
+    // spark.sql.defaultSizeInBytes and never broadcast
+    val df = spark.range(1000).select(col("id").as("vid")).repartition(4, col("vid"))
+    val size = PartitionedCheckpoint.localCheckpointHashed(df, Seq("vid"), 4)
+      .queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size == df.localCheckpoint().queryExecution.optimizedPlan.stats.sizeInBytes)
+    assert(size < BigInt(org.apache.spark.sql.internal.SQLConf.get.defaultSizeInBytes), s"size $size")
+  }
+
   test("missing key column falls back to the plain checkpoint") {
     val df = spark.range(10).select(col("id").as("vid"))
     val ck = PartitionedCheckpoint.localCheckpointHashed(df, Seq("nope"), 4)
